@@ -701,7 +701,7 @@ object TextOps {
   ): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val inv0 = Dedup.dropOverfullBuckets(
+    val inv = Dedup.dropOverfullBuckets(
       docs.select(col(idCol), explode(fingerprintWinnow(col(textCol), k, w)).as("__h")),
       Seq("__h"), maxBucketSize, "winnowOverlap", logMetric = false)
     // with the guard active AND unsolved the index is scanned twice
@@ -712,11 +712,15 @@ object TextOps {
     // persist would serve nothing: the returned self-join's two sides
     // share one exchange at runtime (ReuseExchange), paying the
     // fingerprint pass once per action either way.
-    val dialSolved = maxCandidatePairs > 0 && DialMemo.solved(inv0, "winnow.guard", Nil)
-    val inv =
-      if (maxCandidatePairs > 0 && !dialSolved)
-        inv0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else inv0
+    // `persisted` is the ONE key for every later cache decision (the
+    // refusal-path unpersist, the auto-release arm): object identity
+    // cannot tell the two branches apart because `persist` returns
+    // `this`, and acting on a frame this call never persisted would hit
+    // whatever the CacheManager holds for the same PLAN — a caller's own
+    // cache of an identical index would be adopted and dropped.
+    val persisted = maxCandidatePairs > 0 &&
+      !DialMemo.solved(inv, "winnow.guard", Nil)
+    if (persisted) inv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // fail-loud candidate-volume guard (the dropOverfullBuckets pattern
     // lifted to PAIR level): one aggregation over the byte-small inverted
     // index measures the self-join's exact emission Σ C(bucket, 2) BEFORE
@@ -731,7 +735,7 @@ object TextOps {
     if (maxCandidatePairs > 0) {
       // n·(n−1) summed as LONG (SQL `/` would promote to double), halved
       // exactly in Scala — n·(n−1) is always even
-      val vol = DialMemo.sizes(inv0, "winnow.guard", Nil) {
+      val vol = DialMemo.sizes(inv, "winnow.guard", Nil) {
         Seq(inv.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
           .agg(coalesce(sum(col("__n") * (col("__n") - 1)), lit(0L)))
           .collect().head.getLong(0) / 2)
@@ -740,8 +744,10 @@ object TextOps {
       if (vol > maxCandidatePairs) {
         // a refused run returns no plan that could ever consume the
         // scratch — release it before failing or the refusal would pin
-        // the whole inverted index in a long-lived session
-        inv.unpersist(blocking = false)
+        // the whole inverted index in a long-lived session; a memo hit
+        // persisted nothing, and an unpersist (by plan equality) would
+        // drop a caller's same-plan cache entry instead
+        if (persisted) inv.unpersist(blocking = false)
         throw new IllegalArgumentException(
           s"winnowOverlap: the fingerprint self-join would emit $vol candidate pairs " +
             s"(> $maxCandidatePairs allowed) — the measured n² frontier (SCALING_r12 §4). " +
@@ -752,8 +758,11 @@ object TextOps {
             "maxCandidatePairs deliberately for an audit-scale run.")
       }
       // auto-release: the guard scan above was the last in-function use;
-      // the first caller action over the returned join releases the index
-      if (inv ne inv0) ScratchCache.arm(docs.sparkSession, inv)
+      // the first caller action over the returned join releases the index.
+      // Keyed on `persisted`, not on object identity (persist returns
+      // `this`) and not unconditional (on a hit, arm would find a
+      // caller's same-plan entry and release it after one action)
+      if (persisted) ScratchCache.arm(docs.sparkSession, inv)
     }
     // pinned-exchange self-join (the embeddingNearDups treatment): the
     // inverted index is byte-small while the hash-bucket self-join's

@@ -94,10 +94,21 @@ class ScratchCacheSpec extends AnyFunSuite
     ).toDF("doc_id", "text")
     val out = TextOps.winnowOverlap(docs, "text", "doc_id")
     assert(!cacheEmpty)
+    // the DialMemo miss persisted the index AND armed its release
+    assert(ScratchCache.pendingGroups >= 1)
     val rows = out.collect()
     awaitRelease()
     assert(cacheEmpty, "winnowOverlap inverted index still cached after consumption")
+    assert(ScratchCache.pendingGroups == 0)
     assert(rows.nonEmpty)
+    // the other branch of the persist decision: the same construction is
+    // now a DialMemo hit, which persists nothing and so arms nothing —
+    // checked right after construction, with no release to wait for
+    val hit = TextOps.winnowOverlap(docs, "text", "doc_id")
+    assert(cacheEmpty, "winnowOverlap memo hit persisted its inverted index")
+    assert(ScratchCache.pendingGroups == 0)
+    assert(hit.collect().map(_.toString).sorted
+      .sameElements(rows.map(_.toString).sorted), "memo hit changed winnowOverlap rows")
   }
 
   test("winnowOverlap guard refusal releases the index before throwing") {
