@@ -1,6 +1,12 @@
 package graft
 
+import scala.collection.immutable.VectorMap
+
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
+import graft.util.{JArray, JBool, JNumber, JObject, JString, JValue}
 
 /** Driver-run benchmark: executes every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -8,17 +14,26 @@ import org.apache.spark.sql.SparkSession
   * Methodology:
   *  - all available cores by default (`SPARK_GRAFT_CPUS` overrides) with
   *    shuffle partitions matched to the core count;
-  *  - a full warmup pass first, so timings reflect steady state (JIT and
-  *    codegen caches populated) — the same warmed-cycle methodology as the
-  *    reference's Benchmark.js numbers;
+  *  - a full warmup pass first, so timings reflect steady state — the
+  *    same warmed-cycle methodology as the reference's Benchmark.js
+  *    numbers. The warm-up compiles the whole-stage/expression classes the
+  *    surface generates (1,999 at sf0.1), and the codegen class cache
+  *    (`spark.sql.codegen.cache.maxEntries`, pinned in
+  *    [[SparkEntry.pinnedStaticConfs]]) holds all of them, so a timed rep
+  *    compiles only classes the warm-up never generated. At Spark's default
+  *    of 100 entries each query's classes were evicted long before its reps
+  *    ran and every rep recompiled them. The artifact's `queries_codegen`
+  *    records each query's compiled classes and Janino ms, warm-up and reps
+  *    apart, and `codegen.reps` sums the reps (80 classes at sf0.1);
   *  - per-query time is the min of `SPARK_GRAFT_REPS` timed runs (default
   *    2): min-of-N isolates plan cost from GC noise;
   *  - outlier escalation: when a query's min-of-reps exceeds 10× its own
   *    warmup time (and 1 s absolutely), one extra rep runs before
   *    recording — a contention window spanning all regular reps then
   *    cannot masquerade as a plan regression (warmup includes codegen
-  *    compilation, so steady state above 10× warmup is near-impossible
-  *    on an idle box); escalated queries are listed in the JSON;
+  *    compilation the reps do not pay, so steady state above 10× warmup
+  *    is near-impossible on an idle box); escalated queries are listed in
+  *    the JSON;
   *  - the cache is cleared between queries so one operator's persisted
   *    intermediates can never tax another's measurement;
   *  - fixed canaries (a hash loop of constant work) run before and after
@@ -43,10 +58,11 @@ object Bench {
     * locale-sensitive Formatter (a comma-decimal default locale would
     * emit invalid JSON). Full-precision values stay in the fat artifact.
     */
-  private def r4(v: Double): String =
-    if (v.isNaN || v.isInfinite) "-1"
-    else BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)
-      .bigDecimal.stripTrailingZeros.toPlainString
+  private def r4(v: Double): JNumber =
+    if (v.isNaN || v.isInfinite) JNumber(-1)
+    else JNumber(BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP))
+
+  private def strings(xs: Seq[String]): JArray = JArray(xs.map(JString).toVector)
 
   /** Driver contract: ONE COMPACT JSON line, printed as the last stdout
     * line before exit — per-query seconds (4 decimals) + totals + the
@@ -61,15 +77,43 @@ object Bench {
   private[graft] def compactLine(
       results: Seq[(String, Double)], total: Double, normDivisor: Double,
       loadFactor: Double, contended: Boolean, sfDir: String,
-      escalatedJson: String, failedJson: String, partial: Boolean,
-      artifact: String): String = {
-    val qsCompact = results.map { case (k, v) => s"\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
-    s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$qsCompact,""" +
-      s""""sf":"$sfDir","total_norm":${r4(total / normDivisor)},""" +
-      s""""load_factor":${r4(loadFactor)},"contended":$contended,""" +
-      s""""escalated":$escalatedJson,"failed":$failedJson,""" +
-      s""""partial":$partial,"artifact":"$artifact"}"""
+      escalated: Seq[String], failed: Seq[String], partial: Boolean,
+      artifact: String): String =
+    JObject(VectorMap[String, JValue](
+      "metric" -> JString("total"),
+      "value" -> r4(total),
+      "unit" -> JString("sec"),
+      "queries" -> JObject(results.map { case (k, v) => k -> r4(v) }.to(VectorMap)),
+      "sf" -> JString(sfDir),
+      "total_norm" -> r4(total / normDivisor),
+      "load_factor" -> r4(loadFactor),
+      "contended" -> JBool(contended),
+      "escalated" -> strings(escalated),
+      "failed" -> strings(failed),
+      "partial" -> JBool(partial),
+      "artifact" -> JString(artifact),
+    )).render
+
+  /** Codegen compile counters: how many classes Janino compiled (codegen
+    * cache misses) and their compile nanos. Both are JVM-wide and only
+    * grow, so the difference of two readings is what compiled in between.
+    */
+  private[graft] final case class Codegen(classes: Long, nanos: Long) {
+    def -(o: Codegen): Codegen = Codegen(classes - o.classes, nanos - o.nanos)
+    def +(o: Codegen): Codegen = Codegen(classes + o.classes, nanos + o.nanos)
+    def json: JObject = JObject(VectorMap(
+      "classes" -> JNumber(classes), "compile_ms" -> JNumber(BigDecimal(nanos) / 1e6)))
+  }
+  private[graft] object Codegen {
+    def now(): Codegen =
+      Codegen(CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+  }
+
+  /** Used bytes of the Metaspace pool, in MB (-1 if the JVM has none). */
+  private[graft] def metaspaceUsedMb: Long = {
+    import scala.jdk.CollectionConverters._
+    java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").fold(-1L)(_.getUsage.getUsed >> 20)
   }
 
   /** Fixed-work single-thread canary: seconds to xxh64-chain 2e8 longs.
@@ -250,10 +294,16 @@ object Bench {
         case None => all
       }
     }
+    // codegen compiles per query, warm-up and timed reps apart: the
+    // JVM-wide count of classes Janino compiled (codegen cache misses) and
+    // their compile nanos, both monotonic, read before and after
+    val warmupCodegen, repsCodegen = scala.collection.mutable.LinkedHashMap.empty[String, Codegen]
     val warmup = selectedQueries.map { case (name, fn) =>
+      val c0 = Codegen.now()
       val t0 = System.nanoTime()
       val ok = try { evaluate(fn(spark, sfDir)); true } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
+      warmupCodegen(name) = Codegen.now() - c0
       clearAll()
       name -> (if (ok) dt else Double.NaN)
     }.toMap
@@ -287,6 +337,7 @@ object Bench {
         clearAll()
         if (ok) Some(dt) else None
       }
+      val c0 = Codegen.now()
       var times = (1 to reps).flatMap(_ => rep())
       val w = warmup.getOrElse(name, Double.NaN)
       if (times.nonEmpty && !w.isNaN && times.min > math.max(10 * w, 1.0)) {
@@ -295,6 +346,7 @@ object Bench {
         escalated += name
         times ++= rep()
       }
+      repsCodegen(name) = Codegen.now() - c0
       // min > 0 guard: a ~0-second rep would serialize Infinity/NaN into
       // the artifact — not valid JSON — and break downstream json.load
       if (times.size >= 2 && times.min > 0) spreads += name -> (times.max / times.min)
@@ -345,15 +397,13 @@ object Bench {
     val qsNorm = results
       .map { case (k, v) => s"\"" + k + "\":" + (if (v < 0) v else v / normDivisor) }
       .mkString("{", ",", "}")
-    val esc = escalated.map("\"" + _ + "\"").mkString("[", ",", "]")
     // failed queries report -1 per entry but must not SUBTRACT from the
     // headline total (a broken query would read as a round-over-round
     // improvement); they are excluded from the sum and listed explicitly
     val failed = results.collect { case (k, v) if v < 0 => k }
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",""" +
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":${JString(sfDir).render},""" +
         s""""canary_before_sec":$canaryBefore,"canary_after_sec":$canaryAfter,""" +
         s""""canary_mt_before_sec":$canaryMtBefore,"canary_mt_after_sec":$canaryMtAfter,""" +
         s""""canary_idle_calib_sec":$CanaryIdleCalibSec,""" +
@@ -362,7 +412,7 @@ object Bench {
         s""""load_factor":$loadFactor,"load_factor_rel":$loadFactorRel,"contended":$contended,""" +
         s""""norm_divisor":$normDivisor,"total_norm":${total / normDivisor},""" +
         s""""queries_norm":$qsNorm,""" +
-        s""""escalated":$esc,"failed":$failedJson,""" +
+        s""""escalated":${strings(escalated.toSeq).render},"failed":${strings(failed).render},""" +
         // a filtered (ONLY/SKIP) run's total is NOT comparable to a
         // full-surface run's — stamp the active filters so a partial
         // artifact can never masquerade as a round artifact
@@ -379,8 +429,20 @@ object Bench {
         s""""queries_disk_free_bytes":${diskFree.map { case (k, v) =>
           "\"" + k + "\":" + v }.mkString("{", ",", "}")},""" +
         s""""partial":${only.isDefined || skip.nonEmpty},""" +
-        s""""only":${only.getOrElse(Seq.empty).map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
-        s""""skip":${skip.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
+        s""""only":${strings(only.getOrElse(Seq.empty)).render},""" +
+        s""""skip":${strings(skip).render},""" +
+        // codegen compiles per query (warm-up vs timed reps), their sums,
+        // the cache size they ran under, and the Metaspace that holds the
+        // cached classes
+        s""""queries_codegen":${JObject(selectedQueries.map { case (k, _) =>
+          k -> JObject(VectorMap("warmup" -> warmupCodegen(k).json, "reps" -> repsCodegen(k).json))
+        }.to(VectorMap)).render},""" +
+        s""""codegen":${JObject(VectorMap[String, JValue](
+          "cache_max_entries" -> JString(spark.conf.get("spark.sql.codegen.cache.maxEntries")),
+          "warmup" -> warmupCodegen.values.foldLeft(Codegen(0, 0))(_ + _).json,
+          "reps" -> repsCodegen.values.foldLeft(Codegen(0, 0))(_ + _).json,
+          "metaspace_used_mb" -> JNumber(BigDecimal(metaspaceUsedMb)),
+        )).render},""" +
         s""""compile":$compileJson}"""
     // The FAT self-describing artifact goes to the SPARK_GRAFT_BENCH_OUT
     // file ONLY (it grew to hundreds of KB of per-query disk/spread maps,
@@ -400,7 +462,7 @@ object Bench {
       System.err.println(line)
     }
     println(compactLine(results, total, normDivisor, loadFactor, contended,
-      sfDir, esc, failedJson, only.isDefined || skip.nonEmpty, outFile))
+      sfDir, escalated.toSeq, failed, only.isDefined || skip.nonEmpty, outFile))
     spark.stop()
   }
 }

@@ -46,6 +46,7 @@ object SparkEntry {
     *  - **UTC session timezone**: the events oracle and all timestamp
     *    rendering assume it (see `streaming/EventStream.scala` scaladoc on
     *    the session-config side effect).
+    *  - the static confs of [[pinnedStaticConfs]] (codegen class cache).
     */
   def pinnedConfs(shufflePartitions: Int): Map[String, String] = Map(
     "spark.sql.adaptive.enabled" -> "true",
@@ -77,6 +78,29 @@ object SparkEntry {
     // where candidate-sized exchanges are genuinely unavoidable and
     // executor sizing must own the trade.
     "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024 * 1024).toString,
+  ) ++ pinnedStaticConfs
+
+  /** The STATIC confs of [[pinnedConfs]]. The first session of a JVM fixes
+    * them: they take effect only when [[session]] builds that JVM's first
+    * session, as it does for Bench, Verify and the benchmark
+    * (`ifritbench/`); a later `session` call cannot change them (the test
+    * suite builds its shared session with this map for that reason).
+    *
+    *  - **Codegen class cache, 4000 entries.** Spark keeps Janino-compiled
+    *    whole-stage and expression classes in ONE JVM-wide LRU, sized once
+    *    when the JVM first generates code (default 100). A cyclic working
+    *    set larger than an LRU never hits, and the operators' sets are far
+    *    larger: one benchmark `spark` run compiles 307 distinct classes
+    *    (282 in its first pass: 54 for the 10 dialect statements, 228 for
+    *    the 8 curation operators), and Bench's full sf0.1 surface 1,999. At
+    *    100 entries every pass recompiled ~300 classes (~4 s of Janino per
+    *    pass); at 4000, ≥ 2× the larger set, no class is compiled twice
+    *    (CodegenCacheSpec pins it). The cached classes live in
+    *    Metaspace: 163-169 MB over a benchmark run at either size, 216 MB
+    *    after Bench's full surface at 4000.
+    */
+  val pinnedStaticConfs: Map[String, String] = Map(
+    "spark.sql.codegen.cache.maxEntries" -> "4000",
   )
 
   /** Build the session all entrypoints share. The master is whatever

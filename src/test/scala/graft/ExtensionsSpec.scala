@@ -11,7 +11,10 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("vec_dot / simhash60 / word_shingles / minhash_sig usable from spark.sql") {
     // force a genuinely new session so the extension path (not a leftover
-    // per-session registration from another suite) is what resolves
+    // per-session registration from another suite) is what resolves; the
+    // shared session comes first, so its static confs own the JVM whatever
+    // order the suites run in
+    SparkSpec.spark
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearActiveSession()

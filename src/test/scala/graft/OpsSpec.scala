@@ -961,6 +961,17 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
+  test("logistic training refuses dim > 512 up front, naming the limit and the cause") {
+    // callers with dim > 512 worked before the cap and now fail here,
+    // before any job runs: the gradient is one aggregate with dim+1 buffers
+    val docs = Seq((0L, "good prose", true)).toDF("doc_id", "text", "label")
+    val e = intercept[IllegalArgumentException] {
+      Embeddings.trainLogisticWeights(docs, "text", $"label", dim = 513)
+    }
+    assert(e.getMessage == "requirement failed: trainLogisticWeights supports dim <= 512 " +
+      "(got 513): the shuffle-free gradient builds dim+1 aggregate buffers in one operator")
+  }
+
   test("semantic dedup: planted tight clusters found via cells, keep-first keeps min id") {
     // two tight clusters of near-identical vectors + isolated noise: the
     // within-cluster pairs sit far above the threshold, the cross-cluster

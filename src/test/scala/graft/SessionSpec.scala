@@ -16,6 +16,8 @@ class SessionSpec extends AnyFunSuite {
     assert(c("spark.sql.adaptive.coalescePartitions.enabled") == "true")
     assert(c("spark.sql.shuffle.partitions") == "7")
     assert(c("spark.sql.session.timeZone") == "UTC")
+    // static: fixed by the JVM's first session (SparkEntry.pinnedStaticConfs)
+    assert(c("spark.sql.codegen.cache.maxEntries") == "4000")
   }
 
   test("SparkEntry.session builds with every pinned conf applied") {
