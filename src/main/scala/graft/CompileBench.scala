@@ -1,25 +1,29 @@
 package graft
 
+import scala.sys.process.{Process, ProcessLogger}
+
 import graft.schema.Schema
+import graft.util.{JBool, JNull, JString, JValue}
 
 /** Compile-throughput benchmark mirroring the reference's Benchmark.js
   * suite (reference: test/benchmark.js:7-70, numbers in BASELINE.md):
   * the same five queries against the same schema, measured as full
   * compile passes (tokenize → parse → analyze → plan) per second.
   *
-  * Run: sbt "runMain graft.CompileBench"
-  * Prints one JSON line per workload.
+  * Run: sbt "runMain graft.CompileBench [out.json]"
+  * Prints one JSON line covering the five workloads, stamped with the
+  * checkout's `git_sha` and `git_dirty` (both null outside git).
   */
 object CompileBench {
 
-  private val schemaJson =
+  private[graft] val schemaJson =
     """{ "age": "number", "class": "string", "is_master": "boolean",
       |  "bonus": ["number"], "spells": [{ "name": "string", "power": "number" }] }""".stripMargin
 
   /** (workload, query, reference ops/sec from BASELINE.md's table —
     * reference: README.md:281-294, test/benchmark.js:7-70).
     */
-  private val workloads: Seq[(String, String, Long)] = Seq(
+  private[graft] val workloads: Seq[(String, String, Long)] = Seq(
     ("select_field", "SELECT age", 9795L),
     ("select_alias_count", "SELECT class AS klass, COUNT(bonus)", 4791L),
     ("group_by_avg", "SELECT AVG(age) GROUP BY class", 5754L),
@@ -87,8 +91,27 @@ object CompileBench {
     }.mkString("{", ",", "}")
     val below = results.collect { case (k, v, b, _) if v < b => "\"" + k + "\"" }
       .mkString("[", ",", "]")
+    val (sha, dirty) = gitStamp
     s"""{"metric":"compile_ops_per_sec","queries":$qs,"baseline":$base,""" +
       s""""ratio_vs_baseline":$ratio,"spread":$spreads,"rounds":$rounds,""" +
-      s""""below_baseline":$below}"""
+      s""""below_baseline":$below,"git_sha":${sha.render},"git_dirty":${dirty.render}}"""
+  }
+
+  /** The working directory's commit and whether its tree differs from it
+    * (`git status --porcelain` non-empty), as `ifritbench/run.py` stamps
+    * them: both null when git is absent or this is no checkout.
+    */
+  private def gitStamp: (JValue, JValue) = {
+    def git(args: String*): Option[String] = {
+      val out = new StringBuilder
+      try {
+        val code = Process("git" +: args).!(ProcessLogger(l => out.append(l).append('\n'), _ => ()))
+        if (code == 0) Some(out.toString.trim) else None
+      } catch { case _: java.io.IOException => None }
+    }
+    git("rev-parse", "HEAD") match {
+      case Some(sha) => (JString(sha), JBool(git("status", "--porcelain").exists(_.nonEmpty)))
+      case None      => (JNull, JNull)
+    }
   }
 }

@@ -16,7 +16,9 @@ import graft.semantic.Semantic
 object Compiler {
 
   /** A compiled query: the AST, the inferred output schema, and the plan as
-    * a DataFrame transformation.
+    * a DataFrame transformation. Compiling builds no Spark `Column`: every
+    * compile error is decided before `run` exists, and `run` builds the
+    * plan's Columns each time it is applied.
     */
   final case class Compiled(
       statement: Statement,

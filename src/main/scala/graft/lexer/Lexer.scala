@@ -92,7 +92,8 @@ object Lexer {
     if (bd.scale <= 0) bd.toBigInteger.toString else bd.toPlainString
   }
 
-  private def p(re: String) = Pattern.compile("\\s*(?:" + re + ")\\s*")
+  // one alternative of a mode's pattern, with exactly one capturing group
+  private def p(re: String) = "(?:" + re + ")"
 
   // Alternation order matches the reference parser chain
   // (reference: src/Ifrit/Lexer.purs:243-254).
@@ -117,13 +118,13 @@ object Lexer {
   private val parenP    = p("(\\)|\\()")
   private val commaP    = p("(,)")
 
-  private def keywordOf(s: String): Keyword = s.replaceAll("\\s", "") match {
+  private def keywordOf(s: String): Keyword = s match {
     case "AND" => Keyword.And;           case "AS" => Keyword.As
     case "ASC" => Keyword.Asc;           case "DESC" => Keyword.Desc
     case "DISTINCT" => Keyword.Distinct; case "FROM" => Keyword.From
-    case "GROUPBY" => Keyword.GroupBy;   case "LIMIT" => Keyword.Limit
+    case "GROUP BY" => Keyword.GroupBy;  case "LIMIT" => Keyword.Limit
     case "NULL" => Keyword.Null;         case "OFFSET" => Keyword.Offset
-    case "OR" => Keyword.Or;             case "ORDERBY" => Keyword.OrderBy
+    case "OR" => Keyword.Or;             case "ORDER BY" => Keyword.OrderBy
     case "SELECT" => Keyword.Select;     case "WHERE" => Keyword.Where
   }
 
@@ -134,7 +135,7 @@ object Lexer {
     case "STDDEV" => Funktion.Stddev; case "MEDIAN" => Funktion.Median
   }
 
-  private def buildTable(extensions: Boolean): List[(Pattern, String => Token)] = List(
+  private def buildTable(extensions: Boolean): List[(String, String => Token)] = List(
     keywordP  -> ((s: String) => Token.Key(keywordOf(s))),
     (if (extensions) functionPx else functionP) -> ((s: String) => Token.Fn(functionOf(s))),
     unaryP    -> ((_: String) => Token.Not),
@@ -154,42 +155,37 @@ object Lexer {
     commaP    -> ((_: String) => Token.Comma),
   )
 
-  // both alternation tables precomputed once — tokenize is the compile
-  // throughput hot path, one allocation-free list walk per token
-  private val tableParity = buildTable(extensions = false)
-  private val tableExt    = buildTable(extensions = true)
+  /** A mode's alternatives as one pattern, `\s*(?:A|B|…)\s*`: Java tries
+    * them left to right, so the first that matches wins, as in the
+    * reference's chain of parsers (none starts with whitespace, so each
+    * sees the offset it would alone); the group that matched names the token.
+    */
+  private final class Table(alts: List[(String, String => Token)]) {
+    val pattern: Pattern = Pattern.compile(alts.map(_._1).mkString("\\s*(?:", "|", ")\\s*"))
+    val make: Array[String => Token] = alts.map(_._2).toArray
+  }
+
+  private val tableParity = new Table(buildTable(extensions = false))
+  private val tableExt    = new Table(buildTable(extensions = true))
 
   /** Tokenize the whole input. Error string matches the reference
-    * (reference: src/Ifrit/Lexer.purs:46-52, 348-352).
+    * (reference: src/Ifrit/Lexer.purs:46-52, 348-352). Tokenize is the
+    * compile hot path: one matcher per call, moved along the input with
+    * `region`, one match attempt per token.
     */
   def tokenize(input: String, extensions: Boolean = false): Either[String, List[PosToken]] = {
     val table = if (extensions) tableExt else tableParity
+    val m = table.pattern.matcher(input)
     val out = List.newBuilder[PosToken]
     var pos = 0
-    while (true) {
-      var matched = false
-      var it = table
-      while (!matched && it.nonEmpty) {
-        val (pat, mk) = it.head
-        it = it.tail
-        val m = pat.matcher(input)
-        m.region(pos, input.length)
-        if (m.lookingAt()) {
-          out += PosToken(pos, mk(m.group(1)))
-          pos = m.end()
-          matched = true
-        }
-      }
-      if (!matched) {
-        if (pos == input.length) {
-          out += PosToken(pos, Token.EOF)
-          return Right(out.result())
-        } else {
-          // PureScript `show` on a Char renders with single quotes.
-          return Left(s"invalid token '${input.charAt(pos)}' at position $pos")
-        }
-      }
+    while (m.region(pos, input.length).lookingAt()) {
+      var g = 1
+      while (m.start(g) < 0) g += 1
+      out += PosToken(pos, table.make(g - 1)(m.group(g)))
+      pos = m.end()
     }
-    sys.error("unreachable")
+    if (pos == input.length) Right((out += PosToken(pos, Token.EOF)).result())
+    // PureScript `show` on a Char renders with single quotes.
+    else Left(s"invalid token '${input.charAt(pos)}' at position $pos")
   }
 }

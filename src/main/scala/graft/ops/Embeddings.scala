@@ -205,6 +205,9 @@ object Embeddings {
         "gradient builds dim+1 aggregate buffers in one operator")
     require(scale > 0 && lr > 0 && lrBias > 0, "scale and learning rates must be positive")
     val spark = docs.sparkSession
+    // hash_embed and vec_dot are session functions: register them here, so
+    // the operator runs on any session, not only one a caller prepared
+    graft.functions.GraftFunctions.register(spark)
     val Qr = (1L << 20).toDouble // residual / bias quantizer
     val Qg = (1L << 26).toDouble // length-normalized residual quantizer
     val toks = TextOps.tokens(col(textCol))

@@ -25,8 +25,15 @@ import graft.semantic.Semantic.defaultAlias
   *    same-named top-level field (reference bug at Driver/MongoDB.purs:224,249);
   *  - field-vs-field comparisons compare columns instead of a literal
   *    "$field" string (reference bug at Driver/MongoDB.purs:388-390).
+  *
+  * Planning builds no Spark `Column`: the one AST traversal decides every
+  * compile-time error and yields deferred builders (`Col`), run only when
+  * the returned `DataFrame => DataFrame` is applied: each Spark 4 Column
+  * costs µs in `CurrentOrigin.withOrigin`, more than the rest of a compile.
   */
 object Planner {
+
+  private type Col = () => Column // built when the plan runs
 
   private def errCondition(factor: Factor): String =
     s"invalid condition: ${Show.factor(factor)}: should target a field of the document"
@@ -36,10 +43,10 @@ object Planner {
     * the first occurrence's position and the last occurrence's expression
     * (reference: src/Ifrit/Semantic.purs:121 StrMap insert semantics).
     */
-  private def dedupeAliases(cols: List[(String, Column)]): List[Column] = {
-    val m = scala.collection.mutable.LinkedHashMap.empty[String, Column]
+  private def dedupeAliases(cols: List[(String, Col)]): List[Column] = {
+    val m = scala.collection.mutable.LinkedHashMap.empty[String, Col]
     cols.foreach { case (alias, c) => m.update(alias, c) }
-    m.toList.map { case (alias, c) => c.as(alias) }
+    m.toList.map { case (alias, c) => c().as(alias) }
   }
 
   def plan(stmt: Statement): Either[String, DataFrame => DataFrame] = stmt match {
@@ -54,20 +61,21 @@ object Planner {
     case Statement.Select(projections, from, where, orders, limit, offset) =>
       for {
         base <- planBase(from, where, orders, limit, offset)
-        cols <- traverse(projections)(projectionColumn).map(dedupeAliases)
+        cols <- traverse(projections)(projectionColumn)
       } yield (df: DataFrame) => {
         // planned reductions use graft natives (array_sum); make the plan
         // self-contained for callers that run it on an arbitrary session
         graft.functions.GraftFunctions.register(df.sparkSession)
-        base(df).select(cols: _*)
+        base(df).select(dedupeAliases(cols): _*)
       }
 
     case Statement.Group(index, aggregations, from, where, orders, limit, offset) =>
       for {
         base <- planBase(from, where, orders, limit, offset)
-        aggCols <- traverse(aggregations)(aggregationColumn).map(dedupeAliases)
+        aggs <- traverse(aggregations)(aggregationColumn)
       } yield { (df: DataFrame) =>
         val keyed = base(df)
+        val aggCols = dedupeAliases(aggs)
         val idxCol = index match {
           case Index.IdxField(k) => col(k)
           case Index.IdxNull     => lit(null)
@@ -92,10 +100,10 @@ object Planner {
   ): Either[String, DataFrame => DataFrame] =
     for {
       fromFn <- from.fold[Either[String, DataFrame => DataFrame]](Right(identity))(plan)
-      cond <- where.fold[Either[String, Option[Column]]](Right(None))(c => planCondition(c).map(Some(_)))
+      cond <- where.fold[Either[String, Option[Col]]](Right(None))(c => planCondition(c).map(Some(_)))
     } yield { (df0: DataFrame) =>
       var df = fromFn(df0)
-      cond.foreach(c => df = df.filter(c))
+      cond.foreach(c => df = df.filter(c()))
       if (orders.nonEmpty) df = df.orderBy(orders.map(orderColumn): _*)
       limit.foreach(n => df = df.limit(n))
       offset.foreach(m => df = df.offset(m))
@@ -117,12 +125,12 @@ object Planner {
     * double accumulation), MAX/MIN/COUNT as Spark's `array_max`/
     * `array_min`/`size`. No UDFs. Dotted reductions extract the element
     * field natively first (`GetArrayStructFields`) and reduce the
-    * resulting flat array. Callers must register graft functions on the
-    * session (`Compiler.query` does).
+    * resulting flat array; the plan registers graft's functions on the
+    * session it runs on.
     */
-  def projectionColumn(sel: Selector): Either[String, (String, Column)] = sel match {
+  private def projectionColumn(sel: Selector): Either[String, (String, Col)] = sel match {
     case Selector.Field(key, as) =>
-      Right(defaultAlias(key, as) -> col(key))
+      Right(defaultAlias(key, as) -> (() => col(key)))
 
     // extension: Star is statically expanded to Field selectors before
     // planning (Semantic.expandStars); reaching one here means a caller
@@ -132,10 +140,10 @@ object Planner {
 
     // extension: per-row double arithmetic — plain codegen'd expressions
     case Selector.Expr(e, alias) =>
-      Right(alias -> numExprColumn(e, grouped = false))
+      Right(alias -> (() => numExprColumn(e, grouped = false)))
 
     case Selector.Fn(f, key, as) =>
-      Right(defaultAlias(key, as) -> reductionColumn(f, key))
+      Right(defaultAlias(key, as) -> (() => reductionColumn(f, key)))
   }
 
   /** The P2-P7 per-row array-reduction column for a projection-context
@@ -214,38 +222,44 @@ object Planner {
     * named `count` unless aliased — bug-compatible with reference codegen
     * (reference: src/Ifrit/Driver/MongoDB.purs:296-297).
     */
-  def aggregationColumn(sel: Selector): Either[String, (String, Column)] = sel match {
+  private def aggregationColumn(sel: Selector): Either[String, (String, Col)] = sel match {
     case Selector.Field(key, as) =>
-      Right(defaultAlias(key, as) -> collect_list(col(key)))
+      Right(defaultAlias(key, as) -> (() => collect_list(col(key))))
     // defensive: semantic analysis rejects * under GROUP BY
     case Selector.Star => Left("incompatible * projection with GROUP BY expression")
     // extension: arithmetic over grouped aggregates (SUM(a) / SUM(b), …)
     case Selector.Expr(e, alias) =>
-      Right(alias -> numExprColumn(e, grouped = true))
-    case Selector.Fn(Funktion.Avg, key, as)   => Right(defaultAlias(key, as) -> avg(col(key)))
-    case Selector.Fn(Funktion.Count, _, as)   => Right(defaultAlias("count", as) -> count(lit(1)).cast(DoubleType))
-    case Selector.Fn(Funktion.Max, key, as)   => Right(defaultAlias(key, as) -> max(col(key)))
-    case Selector.Fn(Funktion.Min, key, as)   => Right(defaultAlias(key, as) -> min(col(key)))
-    case Selector.Fn(Funktion.Sum, key, as)   => Right(defaultAlias(key, as) -> sum(col(key)))
-    // extension functions (lexed only with extensions = true): sample
-    // stddev and the exact interpolated median (percentile ≡ DuckDB
-    // quantile_cont) — both map-side combinable aggregates
-    case Selector.Fn(Funktion.Stddev, key, as) =>
-      Right(defaultAlias(key, as) -> stddev_samp(col(key)))
-    case Selector.Fn(Funktion.Median, key, as) =>
-      Right(defaultAlias(key, as) -> percentile(col(key), lit(0.5)))
+      Right(alias -> (() => numExprColumn(e, grouped = true)))
+    case Selector.Fn(f, key, as) =>
+      Right(defaultAlias(if (f == Funktion.Count) "count" else key, as) -> (() => groupedColumn(f, key)))
+  }
+
+  /** A grouped aggregate of one field, shared by plain Fn selectors and
+    * function atoms in extension arithmetic. The extension functions
+    * (lexed only with extensions = true) are the sample stddev and the
+    * exact interpolated median (percentile ≡ DuckDB quantile_cont); like
+    * the rest, both are map-side combinable.
+    */
+  private def groupedColumn(f: Funktion, key: String): Column = f match {
+    case Funktion.Avg    => avg(col(key))
+    case Funktion.Count  => count(lit(1)).cast(DoubleType)
+    case Funktion.Max    => max(col(key))
+    case Funktion.Min    => min(col(key))
+    case Funktion.Sum    => sum(col(key))
+    case Funktion.Stddev => stddev_samp(col(key))
+    case Funktion.Median => percentile(col(key), lit(0.5))
   }
 
   // -- conditions ------------------------------------------------------------
 
-  def planCondition(c: Condition): Either[String, Column] = c match {
+  private def planCondition(c: Condition): Either[String, Col] = c match {
     case Condition.Term(t)    => planTerm(t)
-    case Condition.Or(t1, t2) => for { a <- planTerm(t1); b <- planTerm(t2) } yield a || b
+    case Condition.Or(t1, t2) => for { a <- planTerm(t1); b <- planTerm(t2) } yield () => a() || b()
   }
 
-  def planTerm(t: Term): Either[String, Column] = t match {
+  private def planTerm(t: Term): Either[String, Col] = t match {
     case Term.Fact(f)     => planFactor(f)
-    case Term.And(f1, f2) => for { a <- planFactor(f1); b <- planFactor(f2) } yield a && b
+    case Term.And(f1, f2) => for { a <- planFactor(f1); b <- planFactor(f2) } yield () => a() && b()
   }
 
   /** NOT handling mirrors the reference's compile-time push-down including
@@ -254,34 +268,34 @@ object Planner {
     * simplify a plain `!` anyway; we keep the structural rewrite so the
     * quirk and the `{field: false}` bare-field form stay observable.
     */
-  def planFactor(f: Factor): Either[String, Column] = f match {
+  private def planFactor(f: Factor): Either[String, Col] = f match {
     case Factor.Op(o) =>
       o match {
-        case Operand.Field(name) => Right(col(name) === lit(true))
-        case other               => Right(operandColumn(other))
+        case Operand.Field(name) => Right(() => col(name) === lit(true))
+        case other               => Right(() => operandColumn(other))
       }
     case Factor.Cond(c)  => planCondition(c)
     case Factor.Not(x)   => planNotFactor(x)
     case bin: Factor.Bin => planBinary(bin, negated = false)
   }
 
-  private def planNotCondition(c: Condition): Either[String, Column] = c match {
+  private def planNotCondition(c: Condition): Either[String, Col] = c match {
     case Condition.Term(t)    => planNotTerm(t)
-    case Condition.Or(t1, t2) => for { a <- planNotTerm(t1); b <- planNotTerm(t2) } yield a && b
+    case Condition.Or(t1, t2) => for { a <- planNotTerm(t1); b <- planNotTerm(t2) } yield () => a() && b()
   }
 
-  private def planNotTerm(t: Term): Either[String, Column] = t match {
+  private def planNotTerm(t: Term): Either[String, Col] = t match {
     case Term.Fact(f)     => planNotFactor(f)
-    case Term.And(f1, f2) => for { a <- planNotFactor(f1); b <- planNotFactor(f2) } yield a || b
+    case Term.And(f1, f2) => for { a <- planNotFactor(f1); b <- planNotFactor(f2) } yield () => a() || b()
   }
 
-  private def planNotFactor(f: Factor): Either[String, Column] = f match {
+  private def planNotFactor(f: Factor): Either[String, Col] = f match {
     case Factor.Op(o) =>
       o match {
-        case Operand.Field(name) => Right(col(name) === lit(false))
+        case Operand.Field(name) => Right(() => col(name) === lit(false))
         // Non-field operands under NOT are not negated — reference quirk
         // (reference: src/Ifrit/Driver/MongoDB.purs:401-406).
-        case other => Right(operandColumn(other))
+        case other => Right(() => operandColumn(other))
       }
     case Factor.Cond(c)  => planNotCondition(c)
     case Factor.Not(x)   => planNotFactor(x) // double-negation quirk, see scaladoc
@@ -309,15 +323,15 @@ object Planner {
     case Binary.Gte => Binary.Lt
   }
 
-  private def planBinary(bin: Factor.Bin, negated: Boolean): Either[String, Column] = {
+  private def planBinary(bin: Factor.Bin, negated: Boolean): Either[String, Col] = {
     val Factor.Bin(op0, left, right) = bin
     (left, right) match {
       case (Operand.Field(fname), other) =>
         val op = if (negated) negate(op0) else op0
-        Right(applyOp(col(fname), op, other))
+        Right(() => applyOp(col(fname), op, other))
       case (other, Operand.Field(fname)) =>
         val op = reverse(if (negated) negate(op0) else op0)
-        Right(applyOp(col(fname), op, other))
+        Right(() => applyOp(col(fname), op, other))
       case _ => Left(errCondition(bin))
     }
   }
@@ -352,17 +366,7 @@ object Planner {
   private def numExprColumn(e: NumExpr, grouped: Boolean): Column = e match {
     case NumExpr.NLit(n)   => lit(n.toDouble)
     case NumExpr.NField(f) => col(f).cast(DoubleType)
-    case NumExpr.NFn(f, key) =>
-      if (!grouped) reductionColumn(f, key)
-      else f match {
-        case Funktion.Avg    => avg(col(key))
-        case Funktion.Count  => count(lit(1)).cast(DoubleType)
-        case Funktion.Max    => max(col(key))
-        case Funktion.Min    => min(col(key))
-        case Funktion.Sum    => sum(col(key))
-        case Funktion.Stddev => stddev_samp(col(key))
-        case Funktion.Median => percentile(col(key), lit(0.5))
-      }
+    case NumExpr.NFn(f, key) => if (grouped) groupedColumn(f, key) else reductionColumn(f, key)
     case NumExpr.NNeg(inner) => -numExprColumn(inner, grouped)
     case NumExpr.NBin(op, l, r) =>
       val (a, b) = (numExprColumn(l, grouped), numExprColumn(r, grouped))

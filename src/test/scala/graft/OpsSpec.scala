@@ -972,6 +972,19 @@ class OpsSpec extends AnyFunSuite {
       "(got 513): the shuffle-free gradient builds dim+1 aggregate buffers in one operator")
   }
 
+  test("logistic training registers its own session functions: it trains on a fresh session") {
+    // a new session has its own function registry, empty of graft's
+    // natives; the operator must not depend on a caller registering them
+    val fresh = spark.newSession()
+    val docs = fresh.createDataFrame(Seq(
+      (0L, "good solid quality prose", true),
+      (1L, "spam junk noise filler", false),
+    )).toDF("doc_id", "text", "label")
+    val w = Embeddings.trainLogisticWeights(docs, "text", col("label"), dim = 8, epochs = 2)
+      .collect()
+    assert(w.map(_.getInt(0)).sorted.toSeq == (-1 until 8))
+  }
+
   test("semantic dedup: planted tight clusters found via cells, keep-first keeps min id") {
     // two tight clusters of near-identical vectors + isolated noise: the
     // within-cluster pairs sit far above the threshold, the cross-cluster
@@ -2975,6 +2988,29 @@ class OpsSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got2(4L) == "x y")
     assert(got2(5L) == "")
+  }
+
+  test("span dedup: a null-id row counts toward no span's document frequency and passes through") {
+    graft.functions.GraftFunctions.register(spark)
+    val shared = "alpha beta gamma delta epsilon zeta eta theta" // exactly k=8 tokens
+    def rows(docs: org.apache.spark.sql.DataFrame, minDocs: Int) =
+      TextOps.dedupSpans(docs, "text", "doc_id", k = 8, minDocs = minDocs)
+        .collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]) ->
+          ((r.getString(1), r.getLong(3)))).toMap
+    // one real document and one null-id row share the 8-shingle: the
+    // shingle occurs in one document only, so nothing is removed
+    val nullRow = Seq((Option.empty[Long], s"$shared null tail")).toDF("doc_id", "text")
+    val one = Seq((Option(1L), s"head $shared")).toDF("doc_id", "text")
+    val got = rows(one.union(nullRow), minDocs = 2)
+    assert(got(Some(1L)) == ((s"head $shared", 0L)))
+    assert(got(None) == ((s"$shared null tail", 0L)))
+    // the general (minDocs > 2) path counts the same way: two real
+    // documents plus the null-id row are two documents, below minDocs = 3
+    val two = one.union(Seq((Option(2L), s"$shared again")).toDF("doc_id", "text"))
+    val got3 = rows(two.union(nullRow), minDocs = 3)
+    assert(got3(Some(1L)) == ((s"head $shared", 0L)))
+    assert(got3(Some(2L)) == ((s"$shared again", 0L)))
+    assert(got3(None) == ((s"$shared null tail", 0L)))
   }
 
   test("unigram LM: common-token docs score fewer bits than gibberish; OOV heaviest") {
