@@ -195,7 +195,6 @@ object SparkEntry {
     tableCache.synchronized { tableCache.clear() }
     vecCountCache.clear()
     docCountCache.clear()
-    ops.DialMemo.clear()
   }
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {

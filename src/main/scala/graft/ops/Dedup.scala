@@ -2007,39 +2007,22 @@ object Dedup {
       // paragraphs — fall back to the pinned merge over the SAME gated
       // side (still strictly smaller than the full side the legacy path
       // sorts; never estimator-chosen, never an unspillable hash build).
-      val changed0 = kept.filter(col("n_paras_removed") > 0)
-      def measureChanged(frame: DataFrame): Seq[Long] = {
-        val m = frame.agg(
-          coalesce(sum(size(col("__kept"))), lit(0)).cast("long"),
-          count(lit(1))).collect().head
-        Seq(m.getLong(0), m.getLong(1))
-      }
-      // dial-memoized (one measurement job per (plan, JVM)): on a hit the
-      // payload size is known, so the persist (which served the
-      // measurement + the final join) and the job are both skipped — the
-      // final join is the plan's only consumer and computes the changed
-      // set inside the action
+      val changed = kept.filter(col("n_paras_removed") > 0)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val m = changed.agg(
+        coalesce(sum(size(col("__kept"))), lit(0)).cast("long"),
+        count(lit(1))).collect().head
+      val positions = m.getLong(0)
+      log.info(s"reassembleFromPositions: changed_docs=${m.getLong(1)} " +
+        s"kept_positions=$positions (broadcast bound $broadcastMaxPositions)")
+      // the measurement above was the only in-function action; the first
+      // caller action over the returned reassembly auto-releases the
+      // changed-set cache (ScratchCache), so pipeline-staged sessions
+      // don't accumulate one pinned positions frame per dedup pass
+      ScratchCache.arm(docs.sparkSession, changed)
       val side =
-        if (DialMemo.solved(changed0, "para.reassembly", Nil)) {
-          val m = DialMemo.sizes(changed0, "para.reassembly", Nil)(measureChanged(changed0))
-          log.info(s"reassembleFromPositions: changed_docs=${m(1)} " +
-            s"kept_positions=${m(0)} (broadcast bound $broadcastMaxPositions, memo)")
-          if (m(0) <= broadcastMaxPositions) broadcast(changed0)
-          else changed0.hint("merge")
-        } else {
-          val changed = changed0
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val m = DialMemo.sizes(changed0, "para.reassembly", Nil)(measureChanged(changed))
-          log.info(s"reassembleFromPositions: changed_docs=${m(1)} " +
-            s"kept_positions=${m(0)} (broadcast bound $broadcastMaxPositions)")
-          // the measurement above was the only in-function action; the first
-          // caller action over the returned reassembly auto-releases the
-          // changed-set cache (ScratchCache), so pipeline-staged sessions
-          // don't accumulate one pinned positions frame per dedup pass
-          ScratchCache.arm(docs.sparkSession, changed)
-          if (m(0) <= broadcastMaxPositions) broadcast(changed)
-          else changed.hint("merge")
-        }
+        if (positions <= broadcastMaxPositions) broadcast(changed)
+        else changed.hint("merge")
       docs
         .select(col(idCol), coalesce(col(textCol), lit("")).as("__t"),
           parr.as("__parr"))

@@ -10,9 +10,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Lifecycle manager for the measure-then-choose operators' intra-query
   * scratch caches (round-14 advice): `winnowOverlap`, `dedupSpans` and the
-  * paragraph reassembly each persist a byte-small side, run ONE eager
-  * measurement over it at plan-construction time, and reference it again
-  * inside the returned lazy plan — so the persist cannot be released
+  * paragraph reassembly, on every construction that measures (their
+  * `maxCandidatePairs` / `broadcastMaxPositions` > 0, the defaults),
+  * persist a byte-small side, measure it with an eager job at
+  * plan-construction time, choose a strategy or give the guard verdict
+  * from that size, and reference the side again inside the returned lazy
+  * plan — so the persist cannot be released
   * in-function (the consumer hasn't run yet), and before this class nothing
   * ever released it: every call in a long-lived session permanently pinned
   * corpus-scale inverted-index blocks in the CacheManager (the same
@@ -27,8 +30,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * an [[InMemoryRelation]] carrying the frame's [[CachedRDDBuilder]] — an
   * identity that survives `withOutput` copies) is, by construction, the
   * CALLER consuming the operator's returned plan — at that point the whole
-  * group unpersists, including members like dedupSpans' dup-hash set that
-  * appear only inside another member's cached plan, not in the consumer's.
+  * group unpersists, including members that appear only inside another
+  * member's cached plan, not in the consumer's.
   *
   * The measurement actions the operator itself ran must not trigger the
   * release (the listener bus is asynchronous — their completion events can
@@ -65,9 +68,9 @@ object ScratchCache {
       new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
   /** Arm auto-release for scratch frames the calling operator has already
-    * persisted and measured. Frames that are not actually cached (e.g. a
-    * path that skipped its persist) are ignored; arming zero cached frames
-    * is a no-op.
+    * persisted and measured. Frames that are not cached (e.g. cleared
+    * externally in between) are ignored; arming zero cached frames is a
+    * no-op.
     */
   def arm(spark: SparkSession, scratch: DataFrame*): Unit = {
     val cm = spark.sharedState.cacheManager

@@ -704,50 +704,31 @@ object TextOps {
     val inv = Dedup.dropOverfullBuckets(
       docs.select(col(idCol), explode(fingerprintWinnow(col(textCol), k, w)).as("__h")),
       Seq("__h"), maxBucketSize, "winnowOverlap", logMetric = false)
-    // with the guard active AND unsolved the index is scanned twice
-    // (emission agg + the join) — persist the byte-small (id, hash) rows
-    // so the md5 fingerprint pass over the corpus is paid ONCE (spills to
-    // disk if the index outgrows memory; ~16 B/fingerprint). On a
-    // DialMemo hit the measurement job is skipped entirely, so the
-    // persist would serve nothing: the returned self-join's two sides
-    // share one exchange at runtime (ReuseExchange), paying the
-    // fingerprint pass once per action either way.
-    // `persisted` is the ONE key for every later cache decision (the
-    // refusal-path unpersist, the auto-release arm): object identity
-    // cannot tell the two branches apart because `persist` returns
-    // `this`, and acting on a frame this call never persisted would hit
-    // whatever the CacheManager holds for the same PLAN — a caller's own
-    // cache of an identical index would be adopted and dropped.
-    val persisted = maxCandidatePairs > 0 &&
-      !DialMemo.solved(inv, "winnow.guard", Nil)
-    if (persisted) inv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // fail-loud candidate-volume guard (the dropOverfullBuckets pattern
     // lifted to PAIR level): one aggregation over the byte-small inverted
     // index measures the self-join's exact emission Σ C(bucket, 2) BEFORE
     // the quadratic join runs, so a 100 TB run cannot silently pay n² —
     // it either fits the declared ceiling or stops with the dials named.
-    // Cost: one fingerprint scan + a map-combinable agg — O(n), paid once
-    // PER (index plan, JVM): the volume is a pure function of the index,
-    // so re-constructions (bench reps, winnow_auto after winnow_overlap,
-    // pipeline chains) reuse the DialMemo-recorded count instead of
-    // re-scanning the corpus. maxCandidatePairs <= 0 disables (audit-scale
-    // escape hatch, deliberate and in writing).
+    // Cost: one fingerprint scan + a map-combinable agg — O(n), measured
+    // from this call's own input. maxCandidatePairs <= 0 disables
+    // (audit-scale escape hatch, deliberate and in writing).
     if (maxCandidatePairs > 0) {
+      // the guard scans the index twice (emission agg + the join) —
+      // persist the byte-small (id, hash) rows so the md5 fingerprint pass
+      // over the corpus is paid ONCE (spills to disk if the index outgrows
+      // memory; ~16 B/fingerprint)
+      inv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // n·(n−1) summed as LONG (SQL `/` would promote to double), halved
       // exactly in Scala — n·(n−1) is always even
-      val vol = DialMemo.sizes(inv, "winnow.guard", Nil) {
-        Seq(inv.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
-          .agg(coalesce(sum(col("__n") * (col("__n") - 1)), lit(0L)))
-          .collect().head.getLong(0) / 2)
-      }.head
+      val vol = inv.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
+        .agg(coalesce(sum(col("__n") * (col("__n") - 1)), lit(0L)))
+        .collect().head.getLong(0) / 2
       log.info(s"winnowOverlap: candidate_pairs=$vol (guard ceiling $maxCandidatePairs)")
       if (vol > maxCandidatePairs) {
         // a refused run returns no plan that could ever consume the
         // scratch — release it before failing or the refusal would pin
-        // the whole inverted index in a long-lived session; a memo hit
-        // persisted nothing, and an unpersist (by plan equality) would
-        // drop a caller's same-plan cache entry instead
-        if (persisted) inv.unpersist(blocking = false)
+        // the whole inverted index in a long-lived session
+        inv.unpersist(blocking = false)
         throw new IllegalArgumentException(
           s"winnowOverlap: the fingerprint self-join would emit $vol candidate pairs " +
             s"(> $maxCandidatePairs allowed) — the measured n² frontier (SCALING_r12 §4). " +
@@ -758,11 +739,8 @@ object TextOps {
             "maxCandidatePairs deliberately for an audit-scale run.")
       }
       // auto-release: the guard scan above was the last in-function use;
-      // the first caller action over the returned join releases the index.
-      // Keyed on `persisted`, not on object identity (persist returns
-      // `this`) and not unconditional (on a hit, arm would find a
-      // caller's same-plan entry and release it after one action)
-      if (persisted) ScratchCache.arm(docs.sparkSession, inv)
+      // the first caller action over the returned join releases the index
+      ScratchCache.arm(docs.sparkSession, inv)
     }
     // pinned-exchange self-join (the embeddingNearDups treatment): the
     // inverted index is byte-small while the hash-bucket self-join's
@@ -806,11 +784,7 @@ object TextOps {
       candidateBudget: Double = 1e8,
       wFloor: Int = 4,
   ): DataFrame = {
-    // the corpus size feeding the solver is a dial input too — one count
-    // job per (docs plan, JVM), not per construction
-    val n = DialMemo.sizes(docs.select(col(idCol)), "corpus.n", Nil) {
-      Seq(docs.select(col(idCol)).count())
-    }.head
+    val n = docs.select(col(idCol)).count()
     val (w, ms) = winnowConfigFor(n, candidateBudget, minShared, wFloor)
     val predicted = winnowPredictedCandidates(n, w)
     log.info(f"winnowOverlapAuto: n=$n solved w=$w minShared=$ms " +
@@ -1011,7 +985,6 @@ object TextOps {
       k: Int = 8,
       minDocs: Int = 2,
       broadcastMaxPositions: Long = 32000000L,
-      persistIndex: Boolean = false,
   ): DataFrame = {
     require(minDocs >= 2, "minDocs < 2 would remove every document's every span")
     graft.functions.GraftFunctions.register(docs.sparkSession)
@@ -1024,24 +997,9 @@ object TextOps {
     // here keeps the two paths' df semantics identical (a null-id row is
     // a data defect, not a document; its own text is never span-edited
     // either way because the final id-equijoin can't match a null key)
-    val inv0 = docs
+    val inv = docs
       .filter(col(idCol).isNotNull)
       .select(col(idCol), posexplode(shingleHashes).as(Seq("__pos", "__h")))
-    // the index is consumed twice at plan-construction time (the df-gate
-    // aggregation, then the starts build); persistIndex caches the
-    // (id,pos,h) longs across the two passes, freed in-function after the
-    // second. MEASURED A WASH on local disk (r14/spanfix.log: 40.2/235.8 s
-    // vs 45.9/222.0 baseline at sf100/sf300 — the cache write cancels the
-    // saved shingle+hash pass), so the default is false; the dial exists
-    // for deployments where the second scan is genuinely expensive
-    // (remote object storage, compute-priced scans). ProbeSpanCost showed
-    // the row's real super-linear stage is the df-gate aggregation — see
-    // the repartition note below.
-    val measured = broadcastMaxPositions > 0
-    val inv =
-      if (measured && persistIndex)
-        inv0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else inv0
     // document-frequency gate. minDocs = 2 (the default): a hash occurs
     // in >= 2 DISTINCT documents iff min(id) != max(id) over its rows —
     // ONE map-side-combinable aggregation replaces the general path's
@@ -1069,7 +1027,7 @@ object TextOps {
     val aggParts = math.min(2048,
       math.max(np, inv.rdd.getNumPartitions * 8))
     val invByHash = inv.repartition(aggParts, col("__h"))
-    val dupHashes0 =
+    val dupHashes =
       if (minDocs == 2)
         invByHash.groupBy(col("__h"))
           .agg(min(col(idCol)).as("__i0"), max(col(idCol)).as("__i1"))
@@ -1083,89 +1041,51 @@ object TextOps {
           .agg(count(lit(1)).as("__df"))
           .filter(col("__df") >= minDocs)
           .select(col("__h"))
-    // measure-then-choose on the dup-hash SET as well: duplicated hashes
-    // are payload-sized (ProbeSpan: ~0.33% of positions across three
-    // decades), so broadcasting them lets the full inverted index flow
-    // scan-side through a broadcast semi-join — the index then never
-    // shuffles at all. Near-template corpora where the set outgrows the
-    // bound fall back to the shuffled semi-join. broadcastMaxPositions
-    // <= 0 keeps the fully-lazy legacy plan (no action at construction).
-    // the dup-hash broadcast cutoff derives from the caller's ONE scale
-    // dial: a dup-hash entry is a single 8-byte long vs a position entry's
-    // comparable footprint, so half the position bound keeps the default
-    // at ~16M longs (~128 MB relation) on the calibrated box while letting
-    // smaller deployments shrink it by shrinking broadcastMaxPositions —
-    // a buried constant a caller can't tune is an OOM with a delay
-    val dupHashBroadcastMax = math.max(broadcastMaxPositions / 2, 1L)
-    // (dupHashes as used in the join below, raw persisted frame for the
-    // scratch-release arm — the broadcast() hint wraps the plan, and only
-    // the unhinted frame matches its CacheManager entry)
-    // dial-memoized (one count job per (plan, JVM)): on a hit the set's
-    // size is already known, so neither the persist (which existed to
-    // serve the count + the semi-join) nor the job runs — the semi-join
-    // is the plan's only consumer and recomputes it inside the action
-    val dupHashesSolved = broadcastMaxPositions > 0 &&
-      DialMemo.solved(dupHashes0, "spans.duphash", Nil)
-    val (dupHashes, dupHashesScratch) =
-      if (broadcastMaxPositions <= 0) (dupHashes0, None)
-      else if (dupHashesSolved) {
-        // the measure body only runs if a concurrent clear() raced the
-        // solved() check — then it recomputes honestly, just unpersisted
-        val n = DialMemo.sizes(dupHashes0, "spans.duphash", Nil)(
-          Seq(dupHashes0.count())).head
-        log.info(s"dedupSpans: dup_hashes=$n (broadcast cutoff $dupHashBroadcastMax, memo)")
-        (if (n <= dupHashBroadcastMax) broadcast(dupHashes0) else dupHashes0, None)
-      } else {
-        val p = dupHashes0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val n = DialMemo.sizes(dupHashes0, "spans.duphash", Nil)(Seq(p.count())).head
-        log.info(s"dedupSpans: dup_hashes=$n (broadcast cutoff $dupHashBroadcastMax)")
-        (if (n <= dupHashBroadcastMax) broadcast(p) else p, Some(p))
-      }
-    val starts0 = inv.join(dupHashes, Seq("__h"), "left_semi")
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_set(col("__pos"))).as("__starts"))
-    // measure-then-choose (the winnowOverlap guard discipline, join-side
-    // edition): persist the df-gated side — (id, positions) longs only,
-    // never text — and pay one aggregate to learn its TRUE size before
-    // choosing the reassembly strategy. broadcastMaxPositions <= 0 forces
-    // the merge path (streaming/lazy callers that must not run an action
-    // at plan-construction time).
-    def measureStarts(frame: DataFrame): Seq[Long] = {
-      val m = frame.agg(coalesce(sum(size(col("__starts"))), lit(0)).cast("long"),
-        count(lit(1))).collect().head
-      Seq(m.getLong(0), m.getLong(1))
-    }
-    val startsSolved = broadcastMaxPositions > 0 &&
-      DialMemo.solved(starts0, "spans.starts", Nil)
+    def startsOf(dup: DataFrame): DataFrame =
+      inv.join(dup, Seq("__h"), "left_semi")
+        .groupBy(col(idCol))
+        .agg(sort_array(collect_set(col("__pos"))).as("__starts"))
+    // broadcastMaxPositions <= 0 keeps the fully-lazy plan (no action at
+    // construction, merge reassembly) for streaming/lazy callers
     val (starts, useBroadcast) =
-      if (broadcastMaxPositions <= 0) (starts0, false)
-      else if (startsSolved) {
-        // dial-memo hit: the payload size is known, so the persist (which
-        // existed to serve the measurement + the final join) and the
-        // measurement job are both skipped — the final join is the plan's
-        // only consumer of starts and computes it inside the action
-        val m = DialMemo.sizes(starts0, "spans.starts", Nil)(measureStarts(starts0))
-        log.info(s"dedupSpans: dup_positions=${m(0)} dup_docs=${m(1)} " +
-          s"(broadcast bound $broadcastMaxPositions, memo)")
-        // with no construction-time double-pass left, any index/dup-hash
-        // scratch persisted above serves nothing beyond the single caller
-        // action — release in-function rather than leak
-        if (persistIndex) inv.unpersist(blocking = false)
-        dupHashesScratch.foreach(_.unpersist(blocking = false))
-        (starts0, m(0) <= broadcastMaxPositions)
-      } else {
-        val p = starts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val m = DialMemo.sizes(starts0, "spans.starts", Nil)(measureStarts(p))
-        log.info(s"dedupSpans: dup_positions=${m(0)} dup_docs=${m(1)} " +
+      if (broadcastMaxPositions <= 0) (startsOf(dupHashes), false)
+      else {
+        // measure-then-choose on the dup-hash SET: duplicated hashes are
+        // payload-sized (ProbeSpan: ~0.33% of positions across three
+        // decades), so broadcasting them lets the full inverted index flow
+        // scan-side through a broadcast semi-join — the index then never
+        // shuffles at all. Near-template corpora where the set outgrows the
+        // bound fall back to the shuffled semi-join. The cutoff derives
+        // from the caller's ONE scale dial: a dup-hash entry is a single
+        // 8-byte long vs a position entry's comparable footprint, so half
+        // the position bound keeps the default at ~16M longs (~128 MB
+        // relation) on the calibrated box while letting smaller
+        // deployments shrink it by shrinking broadcastMaxPositions — a
+        // buried constant a caller can't tune is an OOM with a delay
+        val dupHashBroadcastMax = math.max(broadcastMaxPositions / 2, 1L)
+        val dh = dupHashes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val n = dh.count()
+        log.info(s"dedupSpans: dup_hashes=$n (broadcast cutoff $dupHashBroadcastMax)")
+        // measure-then-choose on the reassembly join (the winnowOverlap
+        // guard discipline, join-side edition): persist the df-gated side
+        // — (id, positions) longs only, never text — and pay one aggregate
+        // to learn its TRUE size before choosing the strategy
+        val p = startsOf(if (n <= dupHashBroadcastMax) broadcast(dh) else dh)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val m = p.agg(coalesce(sum(size(col("__starts"))), lit(0)).cast("long"),
+          count(lit(1))).collect().head
+        val positions = m.getLong(0)
+        log.info(s"dedupSpans: dup_positions=$positions dup_docs=${m.getLong(1)} " +
           s"(broadcast bound $broadcastMaxPositions)")
         // the measure above fully materialized the starts cache, so the
-        // index and the dup-hash set have no consumers left anywhere —
-        // release them NOW, in-function (only starts outlives plan
-        // construction; the first caller action auto-releases it)
-        if (persistIndex) inv.unpersist(blocking = false)
-        dupHashesScratch.foreach(_.unpersist(blocking = false))
+        // dup-hash set has no consumers left anywhere — release it NOW,
+        // in-function (only starts outlives plan construction; the first
+        // caller action auto-releases it). `dh` is the unhinted frame: the
+        // broadcast() hint wraps the plan, and only `dh` matches its
+        // CacheManager entry
+        dh.unpersist(blocking = false)
         ScratchCache.arm(docs.sparkSession, p)
-        (p, m(0) <= broadcastMaxPositions)
+        (p, positions <= broadcastMaxPositions)
       }
     val toks = tokens(col(textCol))
     docs

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.{Curate, Dedup, DialMemo, Pipeline, Retrieval, TextOps}
+import graft.ops.{Curate, Dedup, Pipeline, Retrieval, TextOps}
 
 /** Spark keeps Janino-compiled codegen classes in one JVM-wide LRU whose
   * size (`spark.sql.codegen.cache.maxEntries`) the session pins. The eight
@@ -51,11 +51,8 @@ class CodegenCacheSpec extends AnyFunSuite {
     d => Retrieval.bm25TopK(d, "text", "doc_id", query = "dup hash scan", k = 50),
   )
 
-  /** Classes compiled while every operator is built and sunk once, from a
-    * cold dial memo so both runs take the same (miss) plans.
-    */
+  /** Classes compiled while every operator is built and sunk once. */
   private def compilesOfOneRun(): Long = {
-    DialMemo.clear()
     val c0 = Bench.Codegen.now()
     operators.foreach(op => op(corpus).write.format("noop").mode("overwrite").save())
     spark.catalog.clearCache()

@@ -1147,8 +1147,11 @@ class OpsSpec extends AnyFunSuite {
       (2L, "shared   footer"), // whitespace-normalized dup, whole doc
       (3L, "unique epsilon"),
     ).toDF("doc_id", "text")
-    val got = Dedup.paragraphDedup(df, "text", "doc_id")
+    def run() = Dedup.paragraphDedup(df, "text", "doc_id")
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
+    val got = run()
+    // a second construction over the same frame gives identical rows
+    assert(run() == got)
     // doc 0 owns the first occurrence of the footer — nothing removed
     assert(got(0L) == (("unique alpha\nSHARED FOOTER\nunique beta", 3L, 0L)))
     // doc 1 loses its footer but keeps the blank separator paragraph
@@ -2468,12 +2471,16 @@ class OpsSpec extends AnyFunSuite {
     // all 6 docs → C(6,2) = 15 pairs per hash; a ceiling of 10 must trip
     val tpl = (1 to 40).map(i => s"w${i % 7}").mkString(" ")
     val many = (0L to 5L).map(i => (i, tpl)).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
+    def refusal() = intercept[IllegalArgumentException] {
       graft.ops.TextOps.winnowOverlap(many, "text", "doc_id",
         maxCandidatePairs = 10L).collect()
     }
+    val e = refusal()
     assert(e.getMessage.contains("candidate pairs"))
     assert(e.getMessage.contains("winnowConfigFor"))
+    // a second construction over the same frame measures again and
+    // refuses with the identical message
+    assert(refusal().getMessage == e.getMessage)
     // the same corpus under the default ceiling passes (pairs flow)
     assert(graft.ops.TextOps.winnowOverlap(many, "text", "doc_id")
       .count() == 15)
@@ -2968,9 +2975,12 @@ class OpsSpec extends AnyFunSuite {
       (2L, "unique prose that repeats repeats repeats repeats nothing shared across documents here"),
       (3L, "tiny doc"), // < k tokens: passes through whole
     ).toDF("doc_id", "text")
-    val got = TextOps.dedupSpans(corpus, "text", "doc_id", k = 8, minDocs = 2)
+    def run() = TextOps.dedupSpans(corpus, "text", "doc_id", k = 8, minDocs = 2)
       .collect().map(r => r.getLong(0) ->
         ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
+    val got = run()
+    // a second construction over the same frame gives identical rows
+    assert(run() == got)
     // the shared 8-token span vanishes from BOTH documents (no canonical
     // survivor — that's the Lee-et-al semantics), neighbors survive
     assert(got(0L) == (("one two three four", 12L, 8L)))

@@ -5,13 +5,16 @@ import org.apache.spark.sql.SparkSession
 /** Dump a subset of SparkEntry.queries + oracle_sql.json for the local
   * DuckDB oracle simulation (tools/oracle_check.py) — iterate on one
   * oracle without running the full Verify sweep.
-  *   sbt "Test/runMain graft.tools.VerifySome /root/testdata/sf0.01 /tmp/vsome q_dedup_simhash"
+  *   sbt "Test/runMain graft.tools.VerifySome <sfDir> <outDir> q_dedup_simhash[,q_other ...]"
+  * Query names may be given as separate arguments or comma-separated.
   */
 object VerifySome {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val names = args.drop(2).toSet
+    val names = args.drop(2).flatMap(_.split(',')).filter(_.nonEmpty).toSet
+    val unknown = names -- graft.SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"no such queries: ${unknown.toSeq.sorted.mkString(", ")}")
     val spark = SparkSession.builder().master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
