@@ -1,16 +1,21 @@
 package graft.lexer
 
-import java.util.regex.Pattern
-
 /** Tokenizer for the query dialect (reference: src/Ifrit/Lexer.purs).
   *
-  * The reference lexes with an ordered regex alternation applied at the
-  * current offset; the first alternative that matches wins and whitespace is
-  * folded into each token's span while the recorded position is the offset
-  * *before* the leading whitespace (reference: src/Ifrit/Lexer.purs:38-51,
-  * 161-254). We reproduce that exactly, including the documented
-  * order-sensitivity ("OR is included in ORDER BY, AS in ASC" —
-  * reference: src/Ifrit/Lexer.purs:176-177).
+  * The reference lexes with an ordered chain of regex parsers applied at the
+  * current offset (reference: src/Ifrit/Lexer.purs:38-51, 161-254). This is
+  * a hand-written one-pass scanner with the same result on every input. At
+  * each offset the alternatives are tried in the reference's order and the
+  * first that matches wins: keyword, function, `NOT`, binary operator,
+  * arithmetic operator (extensions only), boolean, number, string, word,
+  * parenthesis, comma. Within the keywords, `ORDER BY` is tried before `OR`
+  * and `ASC` before `AS`, but a keyword never has to end at a word boundary,
+  * so `ORDERS` lexes as `OR` + `DERS` and `ASCII` as `ASC` + `II` ("OR is
+  * included in ORDER BY, AS in ASC" — reference: src/Ifrit/Lexer.purs:176-177).
+  * Whitespace is the set of Java regex `\s` (space, tab, line feed, vertical
+  * tab, form feed, carriage return). The whitespace before and after a
+  * token is folded into its span; its recorded position is the offset
+  * *before* its leading whitespace.
   */
 object Lexer {
 
@@ -92,97 +97,140 @@ object Lexer {
     if (bd.scale <= 0) bd.toBigInteger.toString else bd.toPlainString
   }
 
-  // one alternative of a mode's pattern, with exactly one capturing group
-  private def p(re: String) = "(?:" + re + ")"
-
-  // Alternation order matches the reference parser chain
-  // (reference: src/Ifrit/Lexer.purs:243-254).
-  private val keywordP =
-    p("(DISTINCT|GROUP BY|ORDER BY|OFFSET|SELECT|WHERE|LIMIT|NULL|FROM|WHERE|AND|ASC|AS|OR|DESC)")
-  private val functionP = p("(AVG|COUNT|MAX|MIN|SUM)")
+  // Each alternative's literals in the reference's order (reference:
+  // src/Ifrit/Lexer.purs:243-254), with the token each lexes to. Tokens that
+  // carry no input text are shared.
+  private val keywordAlts: Array[(String, Token)] = Array(
+    "DISTINCT" -> Keyword.Distinct, "GROUP BY" -> Keyword.GroupBy,
+    "ORDER BY" -> Keyword.OrderBy, "OFFSET" -> Keyword.Offset,
+    "SELECT" -> Keyword.Select, "WHERE" -> Keyword.Where,
+    "LIMIT" -> Keyword.Limit, "NULL" -> Keyword.Null, "FROM" -> Keyword.From,
+    "AND" -> Keyword.And, "ASC" -> Keyword.Asc, "AS" -> Keyword.As,
+    "OR" -> Keyword.Or, "DESC" -> Keyword.Desc,
+  ).map { case (text, k) => text -> Token.Key(k) }
+  private val functionAlts: Array[(String, Token)] = Array(
+    "AVG" -> Funktion.Avg, "COUNT" -> Funktion.Count, "MAX" -> Funktion.Max,
+    "MIN" -> Funktion.Min, "SUM" -> Funktion.Sum,
+  ).map { case (text, f) => text -> Token.Fn(f) }
   // extensions mode adds the roadmap functions
-  private val functionPx = p("(AVG|COUNT|MAX|MIN|SUM|STDDEV|MEDIAN)")
-  private val unaryP    = p("(NOT)")
-  private val binaryP   = p("(!=|=|<|>)")
-  // extensions mode: <= and >= must come before < and > in the alternation
-  // (first match wins); parity mode lexes "<=" as Lt, Eq and the parser
-  // rejects it exactly as the reference does
-  private val binaryPx  = p("(!=|<=|>=|=|<|>)")
-  // extensions mode only: star / arithmetic operators (`-` cannot collide
-  // with numberP, which never matches a leading minus)
-  private val arithP    = p("(\\*|\\+|-|/)")
-  private val booleanP  = p("(true|false)")
-  private val numberP   = p("([0-9]*\\.?[0-9]+)")
-  private val stringP   = p("\"([a-zA-Z0-9_.]+)\"")
-  private val wordP     = p("([a-zA-Z0-9_.]+)")
-  private val parenP    = p("(\\)|\\()")
-  private val commaP    = p("(,)")
+  private val functionAltsX: Array[(String, Token)] =
+    functionAlts ++ Array("STDDEV" -> Token.Fn(Funktion.Stddev), "MEDIAN" -> Token.Fn(Funktion.Median))
+  private val binEq = Token.Bin(Binary.Eq); private val binNeq = Token.Bin(Binary.Neq)
+  private val binLt = Token.Bin(Binary.Lt); private val binGt = Token.Bin(Binary.Gt)
+  private val binLte = Token.Bin(Binary.Lte); private val binGte = Token.Bin(Binary.Gte)
+  private val plus = Token.Arith("+"); private val minus = Token.Arith("-")
+  private val slash = Token.Arith("/")
+  private val boolTrue = Token.Bool(true); private val boolFalse = Token.Bool(false)
 
-  private def keywordOf(s: String): Keyword = s match {
-    case "AND" => Keyword.And;           case "AS" => Keyword.As
-    case "ASC" => Keyword.Asc;           case "DESC" => Keyword.Desc
-    case "DISTINCT" => Keyword.Distinct; case "FROM" => Keyword.From
-    case "GROUP BY" => Keyword.GroupBy;  case "LIMIT" => Keyword.Limit
-    case "NULL" => Keyword.Null;         case "OFFSET" => Keyword.Offset
-    case "OR" => Keyword.Or;             case "ORDER BY" => Keyword.OrderBy
-    case "SELECT" => Keyword.Select;     case "WHERE" => Keyword.Where
-  }
+  // Java regex `\s`, without the UNICODE_CHARACTER_CLASS flag
+  private def isSpace(c: Char): Boolean =
+    c == ' ' || (c >= '\t' && c <= '\r') // tab, line feed, vertical tab, form feed, carriage return
+  private def isDigit(c: Char): Boolean = c >= '0' && c <= '9'
+  // `[a-zA-Z0-9_.]`, the character set of words and strings
+  private def isWordChar(c: Char): Boolean =
+    (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || isDigit(c) || c == '_' || c == '.'
 
-  private def functionOf(s: String): Funktion = s match {
-    case "AVG" => Funktion.Avg; case "COUNT" => Funktion.Count
-    case "MAX" => Funktion.Max; case "MIN" => Funktion.Min
-    case "SUM" => Funktion.Sum
-    case "STDDEV" => Funktion.Stddev; case "MEDIAN" => Funktion.Median
-  }
-
-  private def buildTable(extensions: Boolean): List[(String, String => Token)] = List(
-    keywordP  -> ((s: String) => Token.Key(keywordOf(s))),
-    (if (extensions) functionPx else functionP) -> ((s: String) => Token.Fn(functionOf(s))),
-    unaryP    -> ((_: String) => Token.Not),
-    (if (extensions) binaryPx else binaryP) -> ((s: String) => Token.Bin(s match {
-      case "!=" => Binary.Neq; case "=" => Binary.Eq
-      case "<=" => Binary.Lte; case ">=" => Binary.Gte
-      case "<"  => Binary.Lt;  case ">" => Binary.Gt
-    })),
-  ) ++ (if (extensions) List(
-    arithP    -> ((s: String) => if (s == "*") Token.Star else Token.Arith(s)),
-  ) else Nil) ++ List(
-    booleanP  -> ((s: String) => Token.Bool(s == "true")),
-    numberP   -> ((s: String) => Token.Num(BigDecimal(s))),
-    stringP   -> ((s: String) => Token.Str(s)),
-    wordP     -> ((s: String) => Token.Word(s)),
-    parenP    -> ((s: String) => if (s == "(") Token.Open else Token.Close),
-    commaP    -> ((_: String) => Token.Comma),
-  )
-
-  /** A mode's alternatives as one pattern, `\s*(?:A|B|…)\s*`: Java tries
-    * them left to right, so the first that matches wins, as in the
-    * reference's chain of parsers (none starts with whitespace, so each
-    * sees the offset it would alone); the group that matched names the token.
+  /** One pass over one input: `at(i)` returns the token that starts at
+    * offset `i` and sets `end` to the offset after it, or returns null when
+    * no alternative matches there.
     */
-  private final class Table(alts: List[(String, String => Token)]) {
-    val pattern: Pattern = Pattern.compile(alts.map(_._1).mkString("\\s*(?:", "|", ")\\s*"))
-    val make: Array[String => Token] = alts.map(_._2).toArray
+  private final class Scanner(s: String, extensions: Boolean) {
+    var end = 0
+
+    private def wordEnd(i: Int): Int = {
+      var j = i
+      while (j < s.length && isWordChar(s.charAt(j))) j += 1
+      j
+    }
+
+    private def digitsEnd(i: Int): Int = {
+      var j = i
+      while (j < s.length && isDigit(s.charAt(j))) j += 1
+      j
+    }
+
+    private def firstOf(alts: Array[(String, Token)], i: Int): Token = {
+      var k = 0
+      while (k < alts.length) {
+        val text = alts(k)._1
+        if (s.startsWith(text, i)) { end = i + text.length; return alts(k)._2 }
+        k += 1
+      }
+      null
+    }
+
+    private def one(t: Token, i: Int): Token = { end = i + 1; t }
+
+    // `[0-9]*\.?[0-9]+` as a backtracking regex matches it: a fraction only
+    // when the dot has a digit after it, so "1." lexes as 1, then "."
+    private def number(i: Int): Token = {
+      val intEnd = digitsEnd(i)
+      val fracEnd =
+        if (intEnd < s.length && s.charAt(intEnd) == '.') digitsEnd(intEnd + 1) else intEnd + 1
+      end = if (fracEnd > intEnd + 1) fracEnd else intEnd
+      if (end > i) Token.Num(BigDecimal(s.substring(i, end))) else null
+    }
+
+    def at(i: Int): Token = {
+      val c = s.charAt(i)
+      var t: Token = null
+      if (c >= 'A' && c <= 'Z') {
+        t = firstOf(keywordAlts, i)
+        if (t == null) t = firstOf(if (extensions) functionAltsX else functionAlts, i)
+        if (t == null && s.startsWith("NOT", i)) { end = i + 3; t = Token.Not }
+        if (t != null) return t
+      }
+      val next = if (i + 1 < s.length) s.charAt(i + 1) else '\u0000'
+      c match {
+        case '!' if next == '=' => end = i + 2; binNeq
+        // parity mode lexes "<=" as Lt, then Eq, as the reference does
+        case '<' if extensions && next == '=' => end = i + 2; binLte
+        case '>' if extensions && next == '=' => end = i + 2; binGte
+        case '=' => one(binEq, i)
+        case '<' => one(binLt, i)
+        case '>' => one(binGt, i)
+        case '*' if extensions => one(Token.Star, i)
+        case '+' if extensions => one(plus, i)
+        case '-' if extensions => one(minus, i)
+        case '/' if extensions => one(slash, i)
+        case 't' if s.startsWith("true", i) => end = i + 4; boolTrue
+        case 'f' if s.startsWith("false", i) => end = i + 5; boolFalse
+        case '"' =>
+          val close = wordEnd(i + 1)
+          if (close > i + 1 && close < s.length && s.charAt(close) == '"') {
+            end = close + 1
+            Token.Str(s.substring(i + 1, close))
+          } else null
+        case '(' => one(Token.Open, i)
+        case ')' => one(Token.Close, i)
+        case ',' => one(Token.Comma, i)
+        case _ if isDigit(c) || c == '.' =>
+          t = number(i)
+          if (t != null) t else { end = wordEnd(i); Token.Word(s.substring(i, end)) }
+        case _ if isWordChar(c) => end = wordEnd(i); Token.Word(s.substring(i, end))
+        case _ => null
+      }
+    }
   }
 
-  private val tableParity = new Table(buildTable(extensions = false))
-  private val tableExt    = new Table(buildTable(extensions = true))
-
-  /** Tokenize the whole input. Error string matches the reference
-    * (reference: src/Ifrit/Lexer.purs:46-52, 348-352). Tokenize is the
-    * compile hot path: one matcher per call, moved along the input with
-    * `region`, one match attempt per token.
+  /** Tokenize the whole input in one pass. Error string matches the
+    * reference (reference: src/Ifrit/Lexer.purs:46-52, 348-352).
     */
   def tokenize(input: String, extensions: Boolean = false): Either[String, List[PosToken]] = {
-    val table = if (extensions) tableExt else tableParity
-    val m = table.pattern.matcher(input)
+    val scan = new Scanner(input, extensions)
     val out = List.newBuilder[PosToken]
     var pos = 0
-    while (m.region(pos, input.length).lookingAt()) {
-      var g = 1
-      while (m.start(g) < 0) g += 1
-      out += PosToken(pos, table.make(g - 1)(m.group(g)))
-      pos = m.end()
+    var done = false
+    while (!done) {
+      var i = pos
+      while (i < input.length && isSpace(input.charAt(i))) i += 1
+      val t = if (i < input.length) scan.at(i) else null
+      if (t == null) done = true
+      else {
+        out += PosToken(pos, t)
+        pos = scan.end
+        while (pos < input.length && isSpace(input.charAt(pos))) pos += 1
+      }
     }
     if (pos == input.length) Right((out += PosToken(pos, Token.EOF)).result())
     // PureScript `show` on a Char renders with single quotes.

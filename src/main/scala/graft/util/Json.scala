@@ -2,14 +2,14 @@ package graft.util
 
 import scala.collection.immutable.VectorMap
 
-/** Minimal self-contained JSON model + parser + printer.
+/** Minimal self-contained JSON model + printer.
   *
-  * Used for decoding schema documents (see graft.schema.Schema) and for
-  * emitting small JSON payloads without depending on any external JSON
-  * library (the build is offline; Spark's own shaded deps are not API).
-  * Object key order is preserved (VectorMap) so that error messages and
-  * encoded schemas are deterministic, mirroring the reference's use of
-  * insertion-ordered string maps (reference: src/Ifrit/Semantic.purs:403-422).
+  * Used for encoding schemas (see graft.schema.Schema) and for emitting
+  * small JSON payloads without depending on any external JSON library (the
+  * build is offline; Spark's own shaded deps are not API). Object key order
+  * is preserved (VectorMap) so that encoded schemas are deterministic,
+  * mirroring the reference's use of insertion-ordered string maps
+  * (reference: src/Ifrit/Semantic.purs:403-422).
   */
 sealed trait JValue {
   def render: String = this match {
@@ -45,118 +45,5 @@ object Json {
       case c => sb.append(c)
     }
     sb.append('"').toString
-  }
-
-  def parse(input: String): Either[String, JValue] = {
-    val p = new Parser(input)
-    try {
-      val v = p.parseValue()
-      p.skipWs()
-      if (p.pos != input.length) Left(s"unexpected trailing characters at ${p.pos}")
-      else Right(v)
-    } catch {
-      case e: JsonError => Left(e.getMessage)
-    }
-  }
-
-  private final class JsonError(msg: String) extends RuntimeException(msg)
-
-  private final class Parser(s: String) {
-    var pos = 0
-    private def fail(msg: String): Nothing = throw new JsonError(s"$msg at position $pos")
-    def skipWs(): Unit = while (pos < s.length && s.charAt(pos).isWhitespace) pos += 1
-    private def expect(c: Char): Unit = {
-      if (pos >= s.length || s.charAt(pos) != c) fail(s"expected '$c'")
-      pos += 1
-    }
-
-    def parseValue(): JValue = {
-      skipWs()
-      if (pos >= s.length) fail("unexpected end of input")
-      s.charAt(pos) match {
-        case '{' => parseObject()
-        case '[' => parseArray()
-        case '"' => JString(parseString())
-        case 't' => literal("true"); JBool(true)
-        case 'f' => literal("false"); JBool(false)
-        case 'n' => literal("null"); JNull
-        case c if c == '-' || c.isDigit => parseNumber()
-        case c => fail(s"unexpected character '$c'")
-      }
-    }
-
-    private def literal(lit: String): Unit =
-      if (s.regionMatches(pos, lit, 0, lit.length)) pos += lit.length
-      else fail(s"invalid literal")
-
-    private def parseObject(): JObject = {
-      expect('{'); skipWs()
-      var m = VectorMap.empty[String, JValue]
-      if (pos < s.length && s.charAt(pos) == '}') { pos += 1; return JObject(m) }
-      var done = false
-      while (!done) {
-        skipWs()
-        val k = parseString()
-        skipWs(); expect(':')
-        val v = parseValue()
-        m = m.updated(k, v)
-        skipWs()
-        if (pos < s.length && s.charAt(pos) == ',') pos += 1
-        else { expect('}'); done = true }
-      }
-      JObject(m)
-    }
-
-    private def parseArray(): JArray = {
-      expect('['); skipWs()
-      val buf = Vector.newBuilder[JValue]
-      if (pos < s.length && s.charAt(pos) == ']') { pos += 1; return JArray(buf.result()) }
-      var done = false
-      while (!done) {
-        buf += parseValue()
-        skipWs()
-        if (pos < s.length && s.charAt(pos) == ',') pos += 1
-        else { expect(']'); done = true }
-      }
-      JArray(buf.result())
-    }
-
-    private def parseString(): String = {
-      expect('"')
-      val sb = new StringBuilder
-      while (pos < s.length && s.charAt(pos) != '"') {
-        val c = s.charAt(pos)
-        if (c == '\\') {
-          pos += 1
-          if (pos >= s.length) fail("unterminated escape")
-          s.charAt(pos) match {
-            case '"'  => sb.append('"')
-            case '\\' => sb.append('\\')
-            case '/'  => sb.append('/')
-            case 'b'  => sb.append('\b')
-            case 'f'  => sb.append('\f')
-            case 'n'  => sb.append('\n')
-            case 'r'  => sb.append('\r')
-            case 't'  => sb.append('\t')
-            case 'u'  =>
-              if (pos + 4 >= s.length) fail("bad unicode escape")
-              sb.append(Integer.parseInt(s.substring(pos + 1, pos + 5), 16).toChar)
-              pos += 4
-            case c2 => fail(s"bad escape '\\$c2'")
-          }
-          pos += 1
-        } else { sb.append(c); pos += 1 }
-      }
-      expect('"')
-      sb.toString
-    }
-
-    private def parseNumber(): JNumber = {
-      val start = pos
-      if (pos < s.length && s.charAt(pos) == '-') pos += 1
-      while (pos < s.length && (s.charAt(pos).isDigit || "+-.eE".indexOf(s.charAt(pos)) >= 0)) pos += 1
-      try JNumber(BigDecimal(s.substring(start, pos)))
-      catch { case _: NumberFormatException => fail("invalid number") }
-    }
   }
 }

@@ -98,4 +98,22 @@ class LexerSpec extends AnyFunSuite {
       Token.Key(Keyword.Where), Token.Word("x"), Token.Bin(Binary.Lt),
       Token.Num(BigDecimal("1")), Token.EOF))
   }
+
+  test("scanner order: a keyword needs no word boundary; a number takes a fraction only with a digit after the dot") {
+    assert(toks("ASCII ORDERS") == List(
+      Token.Key(Keyword.Asc), Token.Word("II"), Token.Key(Keyword.Or), Token.Word("DERS"), Token.EOF))
+    assert(toks("1. .5 1.2.3") == List(
+      Token.Num(BigDecimal("1")), Token.Word("."), Token.Num(BigDecimal("0.5")),
+      Token.Num(BigDecimal("1.2")), Token.Num(BigDecimal("0.3")), Token.EOF))
+    assert(toks("truex 12ab") == List(
+      Token.Bool(true), Token.Word("x"), Token.Num(BigDecimal("12")), Token.Word("ab"), Token.EOF))
+  }
+
+  test("whitespace is the Java regex \\s set; other spaces are invalid tokens") {
+    val ts = Lexer.tokenize("\u000bSELECT\f\ra\t").fold(e => fail(e), identity)
+    assert(ts.map(_.pos) == List(0, 9, 11))
+    assert(Lexer.tokenize("SELECT\u00a0a") == Left("invalid token '\u00a0' at position 6"))
+    assert(Lexer.tokenize("  ") == Left("invalid token ' ' at position 0"))
+    assert(Lexer.tokenize("") == Right(List(PosToken(0, Token.EOF))))
+  }
 }

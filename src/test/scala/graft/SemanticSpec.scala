@@ -137,6 +137,30 @@ class SemanticSpec extends AnyFunSuite {
     assert(Schema.fromString("""{"a": ["number", "string"]}""") ==
       Left("can't decode array: exactly one element is expected"))
     assert(Schema.fromString("""{"a": "float"}""") == Left("unknown schema's typefloat"))
+    // a backslash-u escape takes exactly four ASCII hex digits: non-hex digits and a
+    // sign are rejected, not thrown (NumberFormatException) or accepted
+    assert(Schema.fromString("\"\\uzzzz\"") == Left("bad unicode escape at position 2"))
+    assert(Schema.fromString("\"\\u+041\"") == Left("bad unicode escape at position 2"))
+    assert(Schema.fromString("\"\\u-041\"") == Left("bad unicode escape at position 2"))
+    assert(Schema.fromString("{\"a\": \"\\u006eumber\"}").map(_.show) == Right("""{"a":"number"}"""))
+  }
+
+  test("schema decode precedence: syntax over decode errors, key order, duplicate keys") {
+    // a syntax error anywhere beats a decode error before it
+    assert(Schema.fromString("""{"a": 14, "b": "number",}""") == Left("expected '\"' at position 24"))
+    assert(Schema.fromString("""["float"] x""") == Left("unexpected trailing characters at 10"))
+    // decode errors come in key order
+    assert(Schema.fromString("""{"a": "float", "b": true}""") == Left("unknown schema's typefloat"))
+    // a repeated key keeps its first position and takes its last value
+    assert(Schema.fromString("""{"a": 5, "a": "number"}""").map(_.show) == Right("""{"a":"number"}"""))
+    assert(Schema.fromString("""{"a": "number", "b": "string", "a": "boolean"}""").map(_.show) ==
+      Right("""{"a":"boolean","b":"string"}"""))
+    assert(Schema.fromString("""{"a": "float", "b": 5, "a": "number"}""") ==
+      Left("can't decode number to schema"))
+    // an array's length is checked before its element is decoded
+    assert(Schema.fromString("""{"a": ["float", "number"]}""") ==
+      Left("can't decode array: exactly one element is expected"))
+    assert(Schema.fromString("""{"a": ["float"]}""") == Left("unknown schema's typefloat"))
   }
 
   private def analyzeExt(schemaJson: String, query: String): Either[String, Schema] =
