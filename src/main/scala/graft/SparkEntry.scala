@@ -145,72 +145,99 @@ object SparkEntry {
       .getOrCreate()
   }
 
-  /** Base-table reader, memoized per (session, path): `read.parquet`
-    * builds a fresh file index (directory listing) and re-reads the
-    * parquet footer for schema on EVERY call — pure plan-construction
-    * overhead paid by every query construction in every bench rep
-    * (ProbeConstruct r14: ~0.1 s per query across the 200-row tail).
-    * The memo holds the analyzed scan — never data (no .cache()); the
-    * driver's correctness/bench runs recompute every byte from parquet
-    * exactly as before.
+  /** The memo: what queries read but should not rebuild per call — base
+    * table scans, corpus counts, trained models, committed fixtures and
+    * stores written from a test-data directory — in ONE map under one key
+    * shape, [[MemoKey]]: kind, dir or fixture path, params, and a session
+    * scope set only for entries that hold a `DataFrame`.
     *
-    * Lifecycle (round-14 advice #1): the memoized DataFrames strongly
-    * reference their session via queryExecution, so the former
-    * WeakHashMap[SparkSession, ...] could never collect a key — the
-    * documented value→key pitfall; every stopped session permanently
-    * pinned its analyzed plans and SessionState in a multi-session JVM
-    * (test suites; servers). The map is now keyed by the session's
-    * identity hash — verified by reference on every hit, so a hash
-    * collision merely evicts — with two explicit eviction rules:
-    * entries whose SparkContext has stopped are dropped on the next
-    * access, and the map is LRU-bounded to [[MaxMemoSessions]] live
-    * sessions — a bench/verify JVM uses one slot, suites rotate through,
-    * and the worst-case retention is a handful of scan plans instead of
-    * unbounded.
+    *  - Scans ([[t]]): `read.parquet` builds a fresh file index (directory
+    *    listing) and re-reads the parquet footer on EVERY call, a cost every
+    *    query construction paid in every bench rep (ProbeConstruct r14:
+    *    ~0.1 s per query across the 200-row tail). The entry is the analyzed
+    *    scan, never data (no `.cache()`).
+    *  - Models, counts, fixtures: deterministic in their inputs, so the
+    *    memoized value equals any rebuild (each helper says why it is kept).
+    *  - Stores ([[storeFor]]): directories the memo writes under the JVM
+    *    temp dir and owns.
     *
-    * Staleness (round-14 advice #4): the memo pins the FIRST call's file
-    * listing + schema per (session, path); the test-data tables are
-    * write-once per directory, and stores that ARE written mid-session
-    * (IVF/CC/WARC fixtures) use their own readers, not this. A harness
-    * that regenerates an sf directory inside one JVM must call
-    * [[clearTableMemo]] — `spark.catalog.refreshByPath` cannot see this
-    * private memo ([[TestdataSpec]] pins the invalidation rule).
+    * One routine, [[evict]], drops entries, deleting the directory of any
+    * store among them. A scan references its session through
+    * `queryExecution`, so scoped entries leave with their session: on the
+    * next scoped access, those of a stopped session and those of the
+    * session pushed out past [[MaxMemoSessions]] live sessions (a
+    * bench/verify JVM uses one; suites rotate through). [[clearTableMemo]]
+    * drops everything; JVM exit deletes the stores still held.
+    *
+    * An entry pins what its first build saw. Test-data directories are
+    * write-once, so a JVM that regenerates one must call [[clearTableMemo]]
+    * (`spark.catalog.refreshByPath` cannot see this private memo;
+    * [[TestdataSpec]] pins the rule for a scan, a model and a store).
     */
-  private val MaxMemoSessions = 4
-  private val tableCache =
-    new java.util.LinkedHashMap[Integer,
-        (SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame])](
-        8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Integer,
-            (SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame])])
-          : Boolean = size() > MaxMemoSessions
-    }
+  private final case class MemoKey(
+      kind: String, path: String, params: Any = (), scope: Option[SparkSession] = None)
 
-  /** Drop every memoized scan (and the derived corpus-size memos): the
-    * escape hatch for a session that regenerates test-data directories
-    * mid-JVM. Next access re-lists and re-reads footers.
+  /** Built on first `get`, outside the map's bin lock: builders nest
+    * ([[whiteIvfFor]] trains on [[pcaFor]]'s model; nearly every builder
+    * scans through [[t]]), and a nested `computeIfAbsent` on one
+    * `ConcurrentHashMap` can throw "Recursive update". A build that throws
+    * leaves the entry unbuilt, so the next `get` retries.
     */
-  private[graft] def clearTableMemo(): Unit = {
-    tableCache.synchronized { tableCache.clear() }
-    vecCountCache.clear()
-    docCountCache.clear()
+  private final class Entry(build: () => Any) {
+    @volatile private var built: Option[Any] = None
+    def get: Any = synchronized { built.getOrElse { val v = build(); built = Some(v); v } }
+    def store: Option[String] = built.collect { case Store(dir) => dir }
   }
+  private final case class Store(dir: String)
+
+  private val MaxMemoSessions = 4
+  private val memo = new java.util.concurrent.ConcurrentHashMap[MemoKey, Entry]()
+  private var memoSessions: List[SparkSession] = Nil // most recent first
+  sys.addShutdownHook(evict(_ => true))
+
+  private def memoized[V](key: MemoKey)(build: => V): V = {
+    key.scope.foreach(touch)
+    memo.computeIfAbsent(key, _ => new Entry(() => build)).get.asInstanceOf[V]
+  }
+
+  private def evict(drop: MemoKey => Boolean): Unit = {
+    val it = memo.entrySet().iterator()
+    while (it.hasNext) {
+      val e = it.next()
+      if (drop(e.getKey)) { it.remove(); e.getValue.store.foreach(deleteDir) }
+    }
+  }
+
+  private def touch(s: SparkSession): Unit = memo.synchronized {
+    val (live, stopped) =
+      (s :: memoSessions.filterNot(_ eq s)).partition(!_.sparkContext.isStopped)
+    memoSessions = live.take(MaxMemoSessions)
+    val out = stopped ++ live.drop(MaxMemoSessions)
+    if (out.nonEmpty) evict(_.scope.exists(x => out.exists(_ eq x)))
+  }
+
+  private def deleteDir(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+
+  /** Drop every memo entry and delete the stores it wrote: the escape hatch
+    * for a JVM that regenerates test-data directories.
+    */
+  private[graft] def clearTableMemo(): Unit = evict(_ => true)
 
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val perSession = tableCache.synchronized {
-      val it = tableCache.entrySet().iterator()
-      while (it.hasNext) if (it.next().getValue._1.sparkContext.isStopped) it.remove()
-      val key = Integer.valueOf(System.identityHashCode(s))
-      var e = tableCache.get(key)
-      if (e == null || (e._1 ne s)) {
-        e = (s, new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-        tableCache.put(key, e)
-      }
-      e._2
-    }
-    perSession.computeIfAbsent(s"$dir/$name.parquet", p => s.read.parquet(p))
+    val path = s"$dir/$name.parquet"
+    memoized(MemoKey("scan", path, scope = Some(s)))(s.read.parquet(path))
   }
+
+  /** The store of `kind` for `dir`: `write` fills a fresh `graft-<kind>-`
+    * temp directory once.
+    */
+  private def storeFor(kind: String, dir: String)(write: String => Unit): String =
+    memoized(MemoKey(kind, dir)) {
+      val store = java.nio.file.Files.createTempDirectory(s"graft-$kind-").toString
+      try write(store) catch { case e: Throwable => deleteDir(store); throw e }
+      Store(store)
+    }.dir
 
   /** Probe-sampling rates for the recall METERS, scale-aware above the
     * two driver correctness SFs. At sf0.01/sf0.1 (200 / 2,000 vectors)
@@ -225,14 +252,10 @@ object SparkEntry {
     * with unchanged statistical power — the "pick oneIn so the sample
     * stays audit-sized" guidance, now automatic.
     */
-  private val vecCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
   private def nVecs(s: SparkSession, dir: String): Long =
-    vecCountCache.computeIfAbsent(dir, _ => t(s, dir, "embeddings").count()).longValue()
-  private val docCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+    memoized(MemoKey("count", s"$dir/embeddings"))(t(s, dir, "embeddings").count())
   private def nDocs(s: SparkSession, dir: String): Long =
-    docCountCache.computeIfAbsent(dir, _ => t(s, dir, "documents").count()).longValue()
+    memoized(MemoKey("count", s"$dir/documents"))(t(s, dir, "documents").count())
   private def dedupProbeOneIn(s: SparkSession, dir: String): Int =
     math.max(4L, nVecs(s, dir) / 500L).toInt
   private def simProbeOneIn(s: SparkSession, dir: String): Int =
@@ -408,10 +431,8 @@ object SparkEntry {
     * Training is deterministic (seeded sample + seeded k-means), so the
     * cached index equals what any invocation would train.
     */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.IvfIndex]()
   private def ivfIndexFor(s: SparkSession, dir: String, nlist: Int): ops.Similarity.IvfIndex =
-    ivfIndexCache.computeIfAbsent(s"$dir#$nlist", _ =>
+    memoized(MemoKey("ivf", dir, nlist))(
       ops.Similarity.trainIvf(t(s, dir, "embeddings"), "embedding", "vec_id", nlist))
 
   /** IVF quantizer over the PCA-whitened top-8 projection, trained once
@@ -419,27 +440,21 @@ object SparkEntry {
     * the whitened-SemDeDup row benches the composition's dedup pass
     * rather than a per-row k-means retrain.
     */
-  private val whiteIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.IvfIndex]()
   private def whiteIvfFor(s: SparkSession, dir: String, nlist: Int): ops.Similarity.IvfIndex =
-    whiteIvfCache.computeIfAbsent(s"$dir#$nlist", _ => {
+    memoized(MemoKey("white-ivf", dir, nlist)) {
       graft.functions.GraftFunctions.register(s)
       val m = pcaFor(s, dir, k = 8)
       val white = t(s, dir, "embeddings").select(col("vec_id"),
         ops.Embeddings.pcaProject(m, col("embedding"), whiten = true).as("w"))
       ops.Similarity.trainIvf(white, "w", "vec_id", nlist)
-    })
+    }
 
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.PqCodebooks]()
   private def pqFor(s: SparkSession, dir: String, m: Int, ksub: Int): ops.Similarity.PqCodebooks =
-    pqCache.computeIfAbsent(s"$dir#$m#$ksub", _ =>
+    memoized(MemoKey("pq", dir, (m, ksub)))(
       ops.Similarity.trainPq(t(s, dir, "embeddings"), "embedding", "vec_id", m, ksub))
 
-  private val sqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.SqParams]()
   private def sqFor(s: SparkSession, dir: String, normalize: Boolean): ops.Similarity.SqParams =
-    sqCache.computeIfAbsent(s"$dir#$normalize", _ =>
+    memoized(MemoKey("sq", dir, normalize))(
       ops.Similarity.trainSq(t(s, dir, "embeddings"), "embedding", normalize))
 
   /** COMMITTED ANN index fixtures — the model-checkpoint lifecycle
@@ -462,15 +477,11 @@ object SparkEntry {
     */
   private[graft] val annFixtureDir: String =
     sys.env.getOrElse("SPARK_GRAFT_FIXTURES", "/root/repo/fixtures") + "/ann"
-  private val fixedIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.IvfIndex]()
   private def fixedIvf(s: SparkSession): ops.Similarity.IvfIndex =
-    fixedIvfCache.computeIfAbsent(annFixtureDir, _ =>
+    memoized(MemoKey("fixture", s"$annFixtureDir/ivf16"))(
       ops.Similarity.loadIvf(s, s"$annFixtureDir/ivf16"))
-  private val fixedPqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.PqCodebooks]()
   private def fixedPq(s: SparkSession): ops.Similarity.PqCodebooks =
-    fixedPqCache.computeIfAbsent(annFixtureDir, _ => {
+    memoized(MemoKey("fixture", s"$annFixtureDir/pq16x16")) {
       val cb = ops.Similarity.loadPq(s, s"$annFixtureDir/pq16x16")
       // the PQ oracle SQL (oracleAnnPqCodes) hardcodes dsub = 4 in its
       // list_slice arithmetic — a regenerated fixture with different
@@ -481,11 +492,9 @@ object SparkEntry {
           s"SQL slices at dsub=4; got dim=${cb.dim} m=${cb.m}. Regenerate the oracle " +
           "(oracleAnnPqCodes) together with the fixture, or restore the fixture.")
       cb
-    })
-  private val fixedSemCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Similarity.IvfIndex]()
+    }
   private def fixedSemanticIvf(s: SparkSession): ops.Similarity.IvfIndex =
-    fixedSemCache.computeIfAbsent(annFixtureDir, _ =>
+    memoized(MemoKey("fixture", s"$annFixtureDir/sem8"))(
       ops.Similarity.loadIvf(s, s"$annFixtureDir/sem8"))
 
   /** Incremental-clustering store, written once per sf dir — the
@@ -499,12 +508,9 @@ object SparkEntry {
     * paying both sides in one query; `q_dedup_components_incr_steady`
     * benches what production actually pays.
     */
-  private val ccStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def ccStoreFor(s: SparkSession, dir: String): String =
-    ccStoreCache.computeIfAbsent(dir, _ => {
+    storeFor("cc-store", dir) { store =>
       val hist = t(s, dir, "documents").filter(col("doc_id") < 250)
-      val store = java.nio.file.Files.createTempDirectory("graft-cc-store-").toString
       ops.Dedup.minHashSignatures(hist, "text", "doc_id", numHashes = 128)
         .write.mode("overwrite").parquet(s"$store/signatures")
       ops.Dedup.connectedComponents(
@@ -512,8 +518,7 @@ object SparkEntry {
             numHashes = 128, bands = 32, threshold = 0.5),
           hist.select(col("doc_id").as("id")))
         .write.mode("overwrite").parquet(s"$store/labels")
-      store
-    })
+    }
 
   /** Deterministic page shell around each document's text: title,
     * style/script elements (with a bare `<` inside the script — why the
@@ -557,11 +562,8 @@ object SparkEntry {
     * and SQL-expressible, so the DuckDB oracle can rebuild the identical
     * record strings and re-parse them.
     */
-  private val warcStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def warcStoreFor(s: SparkSession, dir: String): String =
-    warcStoreCache.computeIfAbsent(dir, _ => {
-      val store = java.nio.file.Files.createTempDirectory("graft-warc-").toString
+    storeFor("warc", dir) { store =>
       t(s, dir, "documents").select(
           sources.GraftSource.warcRecord(
             lit("conversion"),
@@ -573,8 +575,7 @@ object SparkEntry {
             col("text")).as("value"))
         .repartition(4)
         .write.mode("overwrite").option("lineSep", "\r\n").text(s"$store/wet")
-      store
-    })
+    }
 
   /** [[messyUrl]] with the path ALWAYS present (`/Articles/{doc_id}`):
     * the e2e crawl fixture needs the document id recoverable from every
@@ -618,11 +619,8 @@ object SparkEntry {
     * rebuilds the identical record strings and replays the ENTIRE
     * ingest chain from them.
     */
-  private val warcHtmlStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def warcHtmlStoreFor(s: SparkSession, dir: String): String =
-    warcHtmlStoreCache.computeIfAbsent(dir, _ => {
-      val store = java.nio.file.Files.createTempDirectory("graft-warc-html-").toString
+    storeFor("warc-html", dir) { store =>
       t(s, dir, "documents").select(
           sources.GraftSource.warcRecord(
             lit("response"),
@@ -632,8 +630,7 @@ object SparkEntry {
             syntheticHtml).as("value"))
         .repartition(4)
         .write.mode("overwrite").option("lineSep", "\r\n").text(s"$store/html")
-      store
-    })
+    }
 
   /** Z-ordered events layout, written once per sf dir: the events table
     * (with `ts` lifted to epoch-micros `ts_us`) Morton-clustered on
@@ -643,19 +640,13 @@ object SparkEntry {
     * the manifest. Deterministic content (layout file boundaries are
     * not, which is why the oracle checks the READ result, not files).
     */
-  private val zStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val zCompactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def zStoreFor(s: SparkSession, dir: String): String =
-    zStoreCache.computeIfAbsent(dir, _ => {
-      val store = java.nio.file.Files.createTempDirectory("graft-zstore-").toString
+    storeFor("zstore", dir) { store =>
       val ev = events(s, dir).select(col("event_id"), col("user_id"),
         unix_micros(col("ts")).as("ts_us"), col("event_type"), col("value"))
       sources.Layout.writeZOrderedWithManifest(ev, s"$store/events_z",
         Seq("user_id", "ts_us"), bits = 8, numFiles = 32)
-      store
-    })
+    }
 
   /** The DuckDB mirror of [[sources.Layout.zValue]]'s bit interleave for
     * two dims: disjoint powers of two, so `+` is exactly the bitwise OR
@@ -673,10 +664,8 @@ object SparkEntry {
     * epochs, integer-exact gradient sums), so the cached model equals
     * what any invocation would train.
     */
-  private val lrModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Array[Int], Double)]()
   private def lrModelFor(s: SparkSession, dir: String): (Array[Int], Double) =
-    lrModelCache.computeIfAbsent(dir, _ => {
+    memoized(MemoKey("lr", dir)) {
       graft.functions.GraftFunctions.register(s)
       val rows = ops.Embeddings.trainLogisticWeights(
         t(s, dir, "documents"), "text", col("lang") === "en").collect()
@@ -685,15 +674,13 @@ object SparkEntry {
       rows.foreach(r =>
         if (r.getInt(0) >= 0) w(r.getInt(0)) = r.getInt(1) else bq = r.getInt(1))
       (w, bq / 1048576.0)
-    })
+    }
 
   /** PCA basis trained once per (sf dir, k) — deterministic (one-pass
     * moments + cyclic Jacobi), so the cached model equals any retrain.
     */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ops.Embeddings.PcaModel]()
   private def pcaFor(s: SparkSession, dir: String, k: Int): ops.Embeddings.PcaModel =
-    pcaCache.computeIfAbsent(s"$dir#$k", _ =>
+    memoized(MemoKey("pca", dir, k))(
       ops.Embeddings.trainPca(t(s, dir, "embeddings"), "embedding", "vec_id", k))
 
   /** COMMITTED 24-merge BPE table: trained ONCE by `Bpe.trainBpe` on the
@@ -714,10 +701,8 @@ object SparkEntry {
     (20, "c", "an"), (21, "s", "can"), (22, "c", "o"), (23, "c", "u"),
   ).map { case (r, a, b) => ops.Bpe.Merge(r, a, b) }
 
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[ops.Bpe.Merge]]()
   private def bpeFor(s: SparkSession, dir: String, n: Int): Seq[ops.Bpe.Merge] =
-    bpeCache.computeIfAbsent(s"$dir#$n", _ =>
+    memoized(MemoKey("bpe", dir, n))(
       ops.Bpe.trainBpe(t(s, dir, "documents"), "text", numMerges = n))
 
   /** Train the in-engine linear classifier on the corpus and return the
@@ -2020,11 +2005,9 @@ object SparkEntry {
     // row hash-mismatches
     "q_layout_compact" -> ((s, dir) => {
       val store = zStoreFor(s, dir)
-      zCompactCache.computeIfAbsent(dir, _ => {
+      memoized(MemoKey("zcompact", store))(
         sources.Layout.compactZOrdered(s, s"$store/events_z", s"$store/events_zc",
-          Seq("user_id", "ts_us"), bits = 8, targetFileBytes = 64L << 10)
-        "done"
-      })
+          Seq("user_id", "ts_us"), bits = 8, targetFileBytes = 64L << 10))
       s.read.parquet(s"$store/events_zc")
     }),
 

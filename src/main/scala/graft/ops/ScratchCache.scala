@@ -46,8 +46,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the result twice should persist the RESULT, which it owns). Release
   * also fires on a FAILED consuming action: a retry loop that leaks
   * corpus-scale cache per attempt is strictly worse than a retry that
-  * recomputes one scan. `releaseAll()` is the explicit escape hatch for
-  * schedulers that abandon plans without ever running them.
+  * recomputes one scan.
   */
 object ScratchCache {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -116,18 +115,6 @@ object ScratchCache {
         catch { case scala.util.control.NonFatal(_) => true }
       }
       if (!alive) it.remove()
-    }
-  }
-
-  /** Unpersist every armed scratch group now — for callers that abandon
-    * returned plans without running them.
-    */
-  def releaseAll(): Unit = {
-    val it = groups.entrySet().iterator()
-    while (it.hasNext) {
-      val g = it.next().getValue
-      it.remove()
-      unpersistGroup(g)
     }
   }
 

@@ -32,15 +32,17 @@ object Parser {
   private val errEOF = "unexpected end of input"
 
   /** Deepest nesting [[statement]] parses: parentheses, `NOT`s, prefix
-    * minuses, function arguments and derived tables, each one level. Deeper
-    * input is a `Left` rather than a stack overflow, here or in the semantic
-    * and planner layers, which recurse over the AST.
+    * minuses, function arguments, derived tables and each operator of an
+    * arithmetic chain, each one level. Deeper input is a `Left` rather than
+    * a stack overflow, here or in the semantic and planner layers, which
+    * recurse over the AST.
     */
   val MaxDepth = 256
 
+  private val DepthErrorPrefix = s"nesting deeper than $MaxDepth at "
   private def errDepth(ts: Tokens): String = ts match {
-    case PosToken(pos, _) :: _ => s"nesting deeper than $MaxDepth at position $pos"
-    case Nil                   => s"nesting deeper than $MaxDepth at end of input"
+    case PosToken(pos, _) :: _ => s"${DepthErrorPrefix}position $pos"
+    case Nil                   => s"${DepthErrorPrefix}end of input"
   }
 
   def parse(tokens: Tokens): Either[String, Statement] =
@@ -60,6 +62,13 @@ object Parser {
     */
   def statement(ts: Tokens, extensions: Boolean = false): P[Statement] =
     new Grammar(extensions).statement(ts)
+
+  // a list segment awaiting the list parsed at `rest` (see Grammar.list)
+  private sealed trait Frame[A] { def rest: Tokens }
+  // a direct element; `err` (null: the rest's own) replaces a failure
+  private final case class Elem[A](x: A, err: String, rest: Tokens) extends Frame[A]
+  // a group parsed at `at`; on failure, `at` is retried as an element
+  private final case class Group[A](at: Tokens, xs: List[A], rest: Tokens) extends Frame[A]
 
   /** The rules of one parse, with the nesting depth it has reached. */
   private final class Grammar(extensions: Boolean) {
@@ -134,38 +143,68 @@ object Parser {
       }
 
     // -- generic comma/paren list (reference: src/Ifrit/Parser.purs:405-437)
-    private def list[A](ts: Tokens, p: Tokens => P[A]): P[List[A]] = ts match {
-      case PosToken(_, Token.Open) :: q =>
-        val asParenList = nested(ts)(list(q, p)).flatMap { case (xs, rest) =>
-          rest match {
-            case PosToken(_, Token.Close) :: PosToken(_, Token.Comma) :: q2 =>
-              list(q2, p).map { case (xs2, rest2) => (xs ++ xs2, rest2) }
-            case PosToken(_, Token.Close) :: q2 => Right((xs, q2))
-            case q2                             => Left(errParenthesis(q2))
+    //
+    // The reference recurses once per element: each segment — a
+    // parenthesized group (a nested list, one level deeper) or a direct
+    // element — is followed, after a comma, by the rest of the list, and a
+    // group whose parse fails ANYWHERE, the rest of the list included, is
+    // retried as a direct element that keeps the group's error. This loop
+    // walks the segments with a stack of frames awaiting the rest of the
+    // list, so a list's length costs no stack. Where the rest of the list is
+    // known to fail, it is not parsed again.
+    private def list[A](ts0: Tokens, p: Tokens => P[A]): P[List[A]] = {
+      var stack: List[Frame[A]] = Nil
+      var failed: java.util.IdentityHashMap[Tokens, String] = null // made on a first failure
+      var done: P[List[A]] = null // the list parsed at the top frame's `rest`
+      var ts = ts0 // where the next segment starts, when `done` is null
+
+      // an element at `at`, the group's retry when `err` is not null
+      def element(at: Tokens, err: String): Unit = p(at) match {
+        case Left(e)                                      => done = Left(if (err == null) e else err)
+        case Right((x, PosToken(_, Token.Comma) :: rest)) => stack ::= Elem(x, err, rest); ts = rest
+        case Right((x, rest))                             => done = Right((List(x), rest))
+      }
+
+      while (stack.nonEmpty || done == null) {
+        if (done == null) {
+          val known = if (failed == null) null else failed.get(ts)
+          if (known != null) done = Left(known)
+          else ts match {
+            case PosToken(_, Token.Open) :: q =>
+              nested(ts)(list(q, p)) match {
+                case Right((xs, PosToken(_, Token.Close) :: PosToken(_, Token.Comma) :: rest)) =>
+                  stack ::= Group(ts, xs, rest); ts = rest
+                case Right((xs, PosToken(_, Token.Close) :: rest)) => done = Right((xs, rest))
+                // extensions: a leading-paren arithmetic selector — e.g.
+                // `(a + 1) / 2 AS x` — is not a parenthesized list; retry
+                // the element parser, which scopes its own parentheses. In
+                // parity mode an element starting with `(` parses as a
+                // one-element paren list whenever it parses at all, so
+                // this retry can only succeed for extension syntax; on
+                // double failure the group's (reference-exact) error is kept.
+                case Right((_, rest)) => element(ts, errParenthesis(rest))
+                case Left(e)          => element(ts, e)
+              }
+            case _ => element(ts, null)
+          }
+        } else {
+          val frame = stack.head
+          stack = stack.tail
+          (frame, done) match {
+            case (Elem(x, _, _), Right((xs, rest)))    => done = Right((x :: xs, rest))
+            case (Group(_, xs, _), Right((xs2, rest))) => done = Right((xs ++ xs2, rest))
+            case (_, Left(e)) =>
+              if (failed == null) failed = new java.util.IdentityHashMap()
+              failed.put(frame.rest, e)
+              frame match {
+                case Elem(_, err, _) => if (err != null) done = Left(err)
+                case Group(at, _, _) => done = null; element(at, e)
+              }
           }
         }
-        asParenList match {
-          case r @ Right(_) => r
-          // extensions: a leading-paren arithmetic selector — e.g.
-          // `(a + 1) / 2 AS x` — is not a parenthesized list; retry the
-          // element parser, which scopes its own parentheses. In parity
-          // mode an element starting with `(` parses as a one-element
-          // paren list whenever it parses at all, so this fallback can
-          // only fire for extension syntax; on double failure the
-          // original (reference-exact) error is kept.
-          case Left(err) => listDirect(ts, p).left.map(_ => err)
-        }
-      case _ => listDirect(ts, p)
-    }
-
-    private def listDirect[A](ts: Tokens, p: Tokens => P[A]): P[List[A]] =
-      p(ts).flatMap { case (x, rest) =>
-        rest match {
-          case PosToken(_, Token.Comma) :: q =>
-            list(q, p).map { case (xs, rest2) => (x :: xs, rest2) }
-          case _ => Right((List(x), rest))
-        }
       }
+      done
+    }
 
     def selectorList(ts: Tokens): P[List[Selector]] = list(ts, selector)
     def orderList(ts: Tokens): P[List[Order]] = list(ts, order)
@@ -186,6 +225,8 @@ object Parser {
                 Right((Selector.Expr(e, as), q2))
               case q2 => Left(errArithAlias(q2))
             }
+          // too deep for the arithmetic grammar is too deep for any
+          case Left(e) if e.startsWith(DepthErrorPrefix) => Left(e)
           case _ => selectorBase(ts)
         }
     }
@@ -197,21 +238,23 @@ object Parser {
     }
 
     // -- numeric expressions (extensions only): + - over * / over atoms,
-    // left-associative, parenthesized subexpressions allowed
+    // left-associative, parenthesized subexpressions allowed. Each chained
+    // operator nests the left-deep tree one level deeper, so it counts
+    // against MaxDepth until its chain ends, as a parenthesis would.
     private def numExpr(ts: Tokens): P[NumExpr] =
       numTerm(ts).flatMap { case (l, rest) => numExprLoop(l, rest) }
     private def numExprLoop(acc: NumExpr, ts: Tokens): P[NumExpr] = ts match {
       case PosToken(_, Token.Arith(op @ ("+" | "-"))) :: q =>
-        numTerm(q).flatMap { case (r, rest) => numExprLoop(NumExpr.NBin(op, acc, r), rest) }
+        nested(ts)(numTerm(q).flatMap { case (r, rest) => numExprLoop(NumExpr.NBin(op, acc, r), rest) })
       case _ => Right((acc, ts))
     }
     private def numTerm(ts: Tokens): P[NumExpr] =
       numAtom(ts).flatMap { case (l, rest) => numTermLoop(l, rest) }
     private def numTermLoop(acc: NumExpr, ts: Tokens): P[NumExpr] = ts match {
       case PosToken(_, Token.Star) :: q =>
-        numAtom(q).flatMap { case (r, rest) => numTermLoop(NumExpr.NBin("*", acc, r), rest) }
+        nested(ts)(numAtom(q).flatMap { case (r, rest) => numTermLoop(NumExpr.NBin("*", acc, r), rest) })
       case PosToken(_, Token.Arith("/")) :: q =>
-        numAtom(q).flatMap { case (r, rest) => numTermLoop(NumExpr.NBin("/", acc, r), rest) }
+        nested(ts)(numAtom(q).flatMap { case (r, rest) => numTermLoop(NumExpr.NBin("/", acc, r), rest) })
       case _ => Right((acc, ts))
     }
     private def numAtom(ts: Tokens): P[NumExpr] = ts match {

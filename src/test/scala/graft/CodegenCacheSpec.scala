@@ -13,7 +13,7 @@ import graft.ops.{Curate, Dedup, Pipeline, Retrieval, TextOps}
   * every pass recompiles. With the pin, the second run of the same plans
   * compiles nothing.
   */
-class CodegenCacheSpec extends AnyFunSuite {
+class CodegenCacheSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
@@ -31,7 +31,7 @@ class CodegenCacheSpec extends AnyFunSuite {
         else Array.fill(30 + rnd.nextInt(30))(if (rnd.nextInt(8) == 0) "the" else vocab(rnd.nextInt(vocab.size)))
       texts += words.mkString(" ")
     }
-    val dir = java.nio.file.Files.createTempDirectory("codegen-corpus").toString + "/docs"
+    val dir = tempDir("codegen-corpus") + "/docs"
     texts.toSeq.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       .coalesce(2).write.parquet(dir)
     spark.read.parquet(dir)

@@ -80,4 +80,31 @@ class CompilerSpec extends AnyFunSuite {
       Right("{\"" + Seq.fill(256)("a").mkString("_") + "\":\"number\"}"))
     assert(compileJson(derived(129)) == Left("nesting deeper than 256 at position 2192"))
   }
+
+  // on a thread with the default stack, as a caller's would be
+  private def onDefaultStack[A](body: => A): A = {
+    var out: Option[A] = None
+    val t = new Thread(() => out = Some(body))
+    t.start(); t.join()
+    out.getOrElse(fail("the compile threw"))
+  }
+
+  test("a 100,000-selector list compiles on a default thread stack") {
+    val query = "SELECT " + Seq.fill(100000)("age").mkString(", ")
+    assert(onDefaultStack(compileJson(query).map(_ => ())) == Right(()))
+    // each parenthesized element is tried as a group and then as a selector;
+    // the rest of a list that failed once is not parsed again, or this
+    // would take 2^100000 parses
+    val failing = "SELECT " + Seq.fill(100000)("(age)").mkString(", ") + ", ("
+    assert(onDefaultStack(compileJson(failing).map(_ => ())) ==
+      Left("unexpected token: EOF at position 700008"))
+  }
+
+  test("an arithmetic chain longer than the cap is a Left naming the depth") {
+    val schema = Schema.fromString(CompileBench.schemaJson).toOption.get
+    // "SELECT " then "age + " per operator: the 257th `+` is at 7 + 256 * 6 + 4
+    val query = "SELECT " + Seq.fill(100001)("age").mkString(" + ") + " AS x"
+    assert(onDefaultStack(Compiler.compile(schema, query, extensions = true).map(_ => ())) ==
+      Left("nesting deeper than 256 at position 1547"))
+  }
 }

@@ -10,7 +10,7 @@ import graft.ops._
   * fixtures: known duplicates, known near-duplicates, known nearest
   * neighbors.
   */
-class OpsSpec extends AnyFunSuite {
+class OpsSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
@@ -424,7 +424,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("Materialize.Reliable checkpoints the result and matches the default") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = tempDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     val reliable = Dedup.minHashNearDups(docs, "text", "doc_id",
         numHashes = 128, bands = 32, threshold = 0.5,
@@ -683,7 +683,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("connected components Materialize.Reliable converges with identical labels") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val dir = tempDir("graft-cc-ckpt")
     spark.sparkContext.setCheckpointDir(dir)
     // a chain (forces several iterations) + a singleton
     val edges = (0L until 15L).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -877,7 +877,7 @@ class OpsSpec extends AnyFunSuite {
     val maxHalfStep = p.widths.max / 2 + 1e-12
     assert(err <= maxHalfStep, s"quantization error $err > half step $maxHalfStep")
     // params persistence round-trip
-    val path = java.nio.file.Files.createTempDirectory("sq").toString + "/params"
+    val path = tempDir("sq") + "/params"
     Similarity.saveSq(p, spark, path)
     val back = Similarity.loadSq(spark, path)
     assert(back.mins.toSeq == p.mins.toSeq && back.maxs.toSeq == p.maxs.toSeq)
@@ -949,7 +949,7 @@ class OpsSpec extends AnyFunSuite {
       docs.filter($"label"), "text", $"label").collect()
     assert(oneClass.forall(_.isNullAt(1)))
     // persistence round-trip: the loaded model scores identically
-    val dir = java.nio.file.Files.createTempDirectory("linw").toString + "/w"
+    val dir = tempDir("linw") + "/w"
     Embeddings.saveLinearWeights(wdf, dir)
     val loaded = Embeddings.loadLinearWeights(spark, dir)
     assert(loaded.toSeq == w.toSeq)
@@ -1312,7 +1312,7 @@ class OpsSpec extends AnyFunSuite {
     val pv = (0L until 50L).map(i =>
       (i, Array.tabulate(8)(d => math.cos(i * 31.0 + d).toFloat))).toDF("id", "v")
     val cb = Similarity.trainPq(pv, "v", "id", m = 4, ksub = 4)
-    val path = java.nio.file.Files.createTempDirectory("pq_cb").toString + "/cb"
+    val path = tempDir("pq_cb") + "/cb"
     Similarity.savePq(cb, spark, path)
     val back = Similarity.loadPq(spark, path)
     assert(back.dim == cb.dim && back.m == cb.m && back.ksub == cb.ksub)
@@ -1328,7 +1328,7 @@ class OpsSpec extends AnyFunSuite {
     val vecs = (0L until 60L).map(i =>
       (i, Array.tabulate(8)(d => math.sin(i * 37.0 + d).toFloat))).toDF("id", "v")
     val idx = Similarity.trainIvf(vecs, "v", "id", nlist = 4)
-    val path = java.nio.file.Files.createTempDirectory("ivf_idx").toString + "/index"
+    val path = tempDir("ivf_idx") + "/index"
     Similarity.saveIvf(idx, spark, path)
     val back = Similarity.loadIvf(spark, path)
     assert(back.centroids.map(_.toSeq).toSeq == idx.centroids.map(_.toSeq).toSeq)
@@ -1837,7 +1837,7 @@ class OpsSpec extends AnyFunSuite {
     val m2 = Embeddings.trainPca(df, "embedding", "vec_id", k = 6)
     assert(m.components.flatten.toSeq == m2.components.flatten.toSeq
       && m.eigenvalues.toSeq == m2.eigenvalues.toSeq)
-    val dir = java.nio.file.Files.createTempDirectory("pca-").toString
+    val dir = tempDir("pca-")
     Embeddings.savePca(m, spark, s"$dir/m")
     val l = Embeddings.loadPca(spark, s"$dir/m")
     assert(l.components.flatten.toSeq == m.components.flatten.toSeq
@@ -2275,7 +2275,7 @@ class OpsSpec extends AnyFunSuite {
     val again = graft.ops.Bpe.trainBpe(corpus.repartition(7), "text", 2)
     assert(again == merges)
     // save/load round-trip preserves the merge table exactly
-    val path = java.nio.file.Files.createTempDirectory("bpe").toString + "/merges"
+    val path = tempDir("bpe") + "/merges"
     graft.ops.Bpe.saveBpe(merges, spark, path)
     assert(graft.ops.Bpe.loadBpe(spark, path) == merges)
   }
@@ -3482,7 +3482,7 @@ class OpsSpec extends AnyFunSuite {
       !p.contains("Exchange"), p)
     // store round trip scores identically; a mismatched query term ORDER
     // is refused loudly (the df columns are positional)
-    val dir = java.nio.file.Files.createTempDirectory("bm25_store").toString + "/s"
+    val dir = tempDir("bm25_store") + "/s"
     Retrieval.saveBm25Stats(stats, dir)
     val loaded = Retrieval.loadBm25Stats(spark, dir)
     val viaStore = Retrieval.bm25Stream(df, loaded, "text", "doc_id", "apple banana")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import graft.sources.{GraftSource, Layout}
 
 /** Schema-gated source readers + partitioned sink, against real testdata. */
-class SourcesSpec extends AnyFunSuite {
+class SourcesSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
@@ -40,7 +40,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("json source reads with the declared schema, no inference") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val tmp = tempDir("graft_json")
     spark.read.parquet(s"$dir/nation.parquet")
       .select($"n_nationkey", $"n_name").write.mode("overwrite").json(tmp)
     val got = GraftSource.json(spark, tmp,
@@ -51,7 +51,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("partitioned sink writes one directory level per key, round-trips") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink").toString
+    val tmp = tempDir("graft_sink")
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select($"l_orderkey", $"l_quantity", $"l_returnflag")
     GraftSource.writeParquet(li, tmp, partitionCols = Seq("l_returnflag"))
@@ -67,7 +67,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("orc source gates like parquet: declared fields, load-time mismatch errors") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_orc").toString
+    val tmp = tempDir("graft_orc")
     spark.read.parquet(s"$dir/nation.parquet").write.mode("overwrite").orc(tmp)
     val got = GraftSource.orc(spark, tmp,
       """{ "n_nationkey": "number", "n_name": "string" }""").fold(e => fail(e), identity)
@@ -82,7 +82,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("sorted sink clusters rows within every file (row-group stats usable)") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_sink_sorted").toString
+    val tmp = tempDir("graft_sink_sorted")
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select($"l_orderkey", $"l_quantity", $"l_returnflag")
     GraftSource.writeParquetSorted(li, tmp,
@@ -102,7 +102,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("sharded export: deterministic shards, manifest certifies the round trip") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_shards").toString + "/out"
+    val tmp = tempDir("graft_shards") + "/out"
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select($"doc_id", $"text")
     val produced = GraftSource.writeShardedWithManifest(docs, tmp, "doc_id", numShards = 4)
@@ -131,7 +131,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("bucketed tables: co-located join and aggregation run with ZERO exchange") {
-    val base = java.nio.file.Files.createTempDirectory("graft_buckets").toString
+    val base = tempDir("graft_buckets")
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     try {
       GraftSource.writeBucketed(docs.select($"doc_id", $"lang"),
@@ -180,7 +180,7 @@ class SourcesSpec extends AnyFunSuite {
     // session to be a genuinely fresh catalog, so this test runs the
     // write and the read in TWO SEPARATE JVMs (derby is also
     // single-process, which forking sidesteps).
-    val wh = java.nio.file.Files.createTempDirectory("graft-wh-").toString
+    val wh = tempDir("graft-wh-")
     val java17 = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     val addOpens = Seq(
@@ -213,7 +213,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("warc: multi-file round trip, byte-accurate multibyte payloads") {
-    val tmp = java.nio.file.Files.createTempDirectory("warc-rt-").toString
+    val tmp = tempDir("warc-rt-")
     // multibyte text: Content-Length is BYTES, so char-based slicing
     // would cut these payloads short
     val docs = Seq(
@@ -253,7 +253,7 @@ class SourcesSpec extends AnyFunSuite {
     // record is flagged truncated, the fragment surfaces as a null-header
     // row (its version-line-shaped lead-in is NOT stripped because no
     // header-shaped continuation follows), and neighbors are untouched
-    val tmp = java.nio.file.Files.createTempDirectory("warc-fs-").toString
+    val tmp = tempDir("warc-fs-")
     val crlf = "\r\n"
     val evil = "quoting a boundary:" + crlf + crlf + "WARC/2.5" + crlf +
       "this text is payload, not a version line"
@@ -290,7 +290,7 @@ class SourcesSpec extends AnyFunSuite {
     // splitting — each file is one decompression stream (gzip is not
     // splittable; parallelism is per-file, the Common Crawl layout of
     // many ~1 GiB members)
-    val tmp = java.nio.file.Files.createTempDirectory("warc-gz-").toString
+    val tmp = tempDir("warc-gz-")
     val crlf = "\r\n"
     def rec(id: Int, payload: String) =
       "WARC/1.0" + crlf + "WARC-Type: conversion" + crlf +
@@ -313,7 +313,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("warc: truncated and malformed records are flagged/null, never fatal") {
-    val tmp = java.nio.file.Files.createTempDirectory("warc-tr-").toString
+    val tmp = tempDir("warc-tr-")
     val crlf = "\r\n"
     def rec(headers: Seq[String], payload: String) =
       "WARC/1.0" + crlf + headers.mkString(crlf) + crlf + crlf + payload + crlf + crlf
@@ -342,7 +342,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("warc source gates like the others: declared subset, unknown field errors") {
-    val tmp = java.nio.file.Files.createTempDirectory("warc-gate-").toString
+    val tmp = tempDir("warc-gate-")
     Seq((1L, "body")).toDF("doc_id", "text")
       .select(GraftSource.warcRecord(lit("conversion"),
         concat(lit("u"), $"doc_id"), lit("d"), lit("text/plain"), $"text").as("value"))
@@ -389,13 +389,13 @@ class SourcesSpec extends AnyFunSuite {
       val per = manifest.select((col(s"max_$c") - col(s"min_$c")).cast("double")).collect()
       per.map(_.getDouble(0)).sum / per.length / 63.0
     }
-    val zdir = java.nio.file.Files.createTempDirectory("graft-zorder-").toString + "/t"
+    val zdir = tempDir("graft-zorder-") + "/t"
     val zman = Layout.writeZOrderedWithManifest(df, zdir, Seq("x", "y"), bits = 6, numFiles = 16)
     // 16 files over a 2-D curve: each file covers ~1/4 of EACH dimension
     assert(avgRange(zman, "x") < 0.5, s"z-layout x range ${avgRange(zman, "x")}")
     assert(avgRange(zman, "y") < 0.5, s"z-layout y range ${avgRange(zman, "y")}")
     // contrast: sort by x alone -> x tight, y saturates the domain
-    val xdir = java.nio.file.Files.createTempDirectory("graft-xsort-").toString + "/t"
+    val xdir = tempDir("graft-xsort-") + "/t"
     df.repartitionByRange(16, $"x").sortWithinPartitions($"x")
       .write.mode("overwrite").parquet(xdir)
     val xman = Layout.zManifest(spark.read.parquet(xdir), Seq("x", "y"))
@@ -406,7 +406,7 @@ class SourcesSpec extends AnyFunSuite {
   test("manifest-pruned read equals full filter and opens a fraction of the files") {
     val rows = new scala.util.Random(11)
       .shuffle((for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong)).toVector)
-    val dir0 = java.nio.file.Files.createTempDirectory("graft-zprune-").toString + "/t"
+    val dir0 = tempDir("graft-zprune-") + "/t"
     Layout.writeZOrderedWithManifest(rows.toDF("x", "y"), dir0, Seq("x", "y"),
       bits = 6, numFiles = 16)
     val ranges = Seq(("x", 8.0, 15.0), ("y", 16.0, 23.0))
@@ -428,7 +428,7 @@ class SourcesSpec extends AnyFunSuite {
   test("null layout values survive the z-layout round trip; residual filter decides") {
     val rows = (0 until 200).map(i => (i.toLong, if (i % 50 == 0) None else Some(i.toLong)))
     val df = rows.toDF("id", "v")
-    val dir0 = java.nio.file.Files.createTempDirectory("graft-znull-").toString + "/t"
+    val dir0 = tempDir("graft-znull-") + "/t"
     Layout.writeZOrderedWithManifest(df, dir0, Seq("v"), bits = 4, numFiles = 4)
     val back = spark.read.parquet(dir0)
     assert(back.count() == 200)
@@ -439,7 +439,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("compaction heals a small-files scatter, restores the sort, keeps content") {
-    val base = java.nio.file.Files.createTempDirectory("graft-compact-").toString
+    val base = tempDir("graft-compact-")
     val li = spark.read.parquet(s"$dir/lineitem.parquet")
       .select($"l_orderkey", $"l_quantity", $"l_returnflag")
     li.repartition(64).write.mode("overwrite").parquet(s"$base/scattered")
@@ -462,7 +462,7 @@ class SourcesSpec extends AnyFunSuite {
   }
 
   test("z-compaction re-clusters and refreshes the pruning manifest") {
-    val base = java.nio.file.Files.createTempDirectory("graft-zcompact-").toString
+    val base = tempDir("graft-zcompact-")
     val rows = new scala.util.Random(3)
       .shuffle((for (x <- 0 until 64; y <- 0 until 64) yield (x.toLong, y.toLong)).toVector)
     // a scattered (unclustered) directory standing in for incremental appends
@@ -491,7 +491,7 @@ class SourcesSpec extends AnyFunSuite {
   test("warc: WARC/1.1 files (ISO 28500:2017) and mixed-version dirs parse every record") {
     // the record split is version-agnostic — a 1.1 file must NOT
     // collapse into one row with the tail records silently lost
-    val tmp = java.nio.file.Files.createTempDirectory("warc-v11-").toString
+    val tmp = tempDir("warc-v11-")
     val crlf = "\r\n"
     def rec(ver: String, id: Int, payload: String) =
       s"WARC/$ver" + crlf + "WARC-Type: conversion" + crlf +
@@ -515,7 +515,7 @@ class SourcesSpec extends AnyFunSuite {
   test("warc.gz splittable: member-boundary byte-range splits match the whole-stream read") {
     // per-record gzip members (the Common Crawl layout): one big file
     // must read with MANY tasks, rows identical to the non-split path
-    val tmp = java.nio.file.Files.createTempDirectory("warc-split-").toString
+    val tmp = tempDir("warc-split-")
     val crlf = "\r\n"
     // payloads that do not compress away: deterministic hex noise, so the
     // compressed file comfortably spans several 64 KiB splits
@@ -570,7 +570,7 @@ class SourcesSpec extends AnyFunSuite {
     // end-1 / end-2 of the range — the scanning task must still claim it
     // (the NEXT task only accepts boundaries >= its own start, so a scan
     // window clipped at `end` silently loses such members)
-    val tmp = java.nio.file.Files.createTempDirectory("warc-straddle-").toString
+    val tmp = tempDir("warc-straddle-")
     val crlf = "\r\n"
     def rec(id: Int) = {
       val payload = s"straddle payload $id " + ("z" * 64)

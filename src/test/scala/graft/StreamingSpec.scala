@@ -10,13 +10,13 @@ import graft.streaming.EventStream
   * parquet → streaming aggregation → memory sink, checked against the
   * equivalent batch plan (stream/batch parity).
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with TempDirs {
   private lazy val spark = SparkSpec.spark
   import spark.implicits._
 
   test("windowed streaming aggregation matches the batch result") {
     // the file stream source wants a directory; stage the events file into one
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = java.nio.file.Paths.get(tempDir("events_stream"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -98,7 +98,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming anomaly meter against the persisted baseline matches batch") {
     // the file stream source wants a directory; stage the events file into one
-    val dir = java.nio.file.Files.createTempDirectory("events_anom")
+    val dir = java.nio.file.Paths.get(tempDir("events_anom"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -765,7 +765,7 @@ class StreamingSpec extends AnyFunSuite {
     // the crawl-directory ingest shape: the file streaming source picks
     // up warc files as they appear; the record parse is the same
     // stateless projection as readWarc, so append mode with no state
-    val dir = java.nio.file.Files.createTempDirectory("warc-stream-").toString
+    val dir = tempDir("warc-stream-")
     val crlf = "\r\n"
     def rec(id: Int, payload: String) =
       "WARC/1.0" + crlf + "WARC-Type: conversion" + crlf +
@@ -804,7 +804,7 @@ class StreamingSpec extends AnyFunSuite {
     // occurrences → rows land in a DURABLE parquet sink; afterwards the
     // sink's micro-batch file scatter is compacted. Every stage is the
     // same operator the batch pipeline uses.
-    val base = java.nio.file.Files.createTempDirectory("crawl-e2e-").toString
+    val base = tempDir("crawl-e2e-")
     val in = s"$base/in"; new java.io.File(in).mkdirs()
     val crlf = "\r\n"
     def page(title: String, body: String) =

@@ -5,6 +5,8 @@ Usage: oracle_check.py <spark_out_dir> <sf_dir> [query ...]
 Reads <out_dir>/<q>/ parquet + <out_dir>/oracle_sql.json, registers the
 sf tables as DuckDB views, runs each oracle SQL, sorts columns by name
 and rows by value, and reports rows/schema/values match per query.
+Exits non-zero when a query fails, when a named query has no oracle SQL,
+or when no query was compared.
 """
 import sys, json, glob, os
 import duckdb
@@ -24,6 +26,12 @@ for p in glob.glob(os.path.join(sf_dir, "*.parquet")):
     con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{p}')")
 
 fails = 0
+missing = sorted(only - oracles.keys())
+for q in missing:
+    print(f"{q}: NOT IN oracle_sql.json"); fails += 1
+    report[q] = {"rows_match": None, "schema_match": None, "hash_match": None,
+                 "spark_rows": None, "oracle_rows": None, "err": "no_oracle_sql"}
+compared = 0
 for q, sql in sorted(oracles.items()):
     if only and q not in only:
         continue
@@ -33,6 +41,7 @@ for q, sql in sorted(oracles.items()):
         report[q] = {"rows_match": None, "schema_match": None, "hash_match": None,
                      "spark_rows": None, "oracle_rows": None, "err": "no_spark_output"}
         continue
+    compared += 1
     sdf = con.execute(f"SELECT * FROM read_parquet({spark_glob!r})")
     scols = sdf.description and [d[0] for d in sdf.description]
     srows = sdf.fetchall()
@@ -71,5 +80,7 @@ for q, sql in sorted(oracles.items()):
 if json_out:
     with open(json_out, "w") as f:
         json.dump(report, f, indent=2, sort_keys=True)
+print("COMPARED:", compared)
 print("FAILURES:", fails)
-sys.exit(1 if fails else 0)
+# a run that compared nothing proves nothing
+sys.exit(1 if fails or not compared else 0)
