@@ -19,7 +19,7 @@ import graft.util.{JArray, JBool, JNumber, JObject, JString, JValue}
   *    numbers. The warm-up compiles the whole-stage/expression classes the
   *    surface generates (1,999 at sf0.1), and the codegen class cache
   *    (`spark.sql.codegen.cache.maxEntries`, pinned in
-  *    [[SparkEntry.pinnedStaticConfs]]) holds all of them, so a timed rep
+  *    [[SparkEntry.pinnedCodegenConfs]]) holds all of them, so a timed rep
   *    compiles only classes the warm-up never generated. At Spark's default
   *    of 100 entries each query's classes were evicted long before its reps
   *    ran and every rep recompiled them. The artifact's `queries_codegen`

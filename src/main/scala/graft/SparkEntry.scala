@@ -46,7 +46,7 @@ object SparkEntry {
     *  - **UTC session timezone**: the events oracle and all timestamp
     *    rendering assume it (see `streaming/EventStream.scala` scaladoc on
     *    the session-config side effect).
-    *  - the static confs of [[pinnedStaticConfs]] (codegen class cache).
+    *  - the codegen confs of [[pinnedCodegenConfs]].
     */
   def pinnedConfs(shufflePartitions: Int): Map[String, String] = Map(
     "spark.sql.adaptive.enabled" -> "true",
@@ -78,13 +78,13 @@ object SparkEntry {
     // where candidate-sized exchanges are genuinely unavoidable and
     // executor sizing must own the trade.
     "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024 * 1024).toString,
-  ) ++ pinnedStaticConfs
+  ) ++ pinnedCodegenConfs
 
-  /** The STATIC confs of [[pinnedConfs]]. The first session of a JVM fixes
-    * them: they take effect only when [[session]] builds that JVM's first
-    * session, as it does for Bench, Verify and the benchmark
-    * (`ifritbench/`); a later `session` call cannot change them (the test
-    * suite builds its shared session with this map for that reason).
+  /** The codegen confs of [[pinnedConfs]], which the test suite's shared
+    * session is built with too. The cache size is STATIC: the first
+    * session of a JVM fixes it, so it takes effect only when [[session]]
+    * builds that JVM's first session, as it does for Bench, Verify and the
+    * benchmark (`ifritbench/`).
     *
     *  - **Codegen class cache, 4000 entries.** Spark keeps Janino-compiled
     *    whole-stage and expression classes in ONE JVM-wide LRU, sized once
@@ -98,9 +98,18 @@ object SparkEntry {
     *    (CodegenCacheSpec pins it). The cached classes live in
     *    Metaspace: 163-169 MB over a benchmark run at either size, 216 MB
     *    after Bench's full surface at 4000.
+    *  - **No stage id in a generated class's name.** The cache is keyed by
+    *    the class source, and by default the whole-stage class is named
+    *    after its codegen stage id. Under AQE the ids follow the order in
+    *    which query stages finish and are re-planned, so the same stage
+    *    can be numbered differently from run to run: its source differs
+    *    only in the name and misses the cache (4 of 146 classes compiled
+    *    again in a failing CodegenCacheSpec run, all connected-components
+    *    stages whose dumped sources differed only in that id).
     */
-  val pinnedStaticConfs: Map[String, String] = Map(
+  val pinnedCodegenConfs: Map[String, String] = Map(
     "spark.sql.codegen.cache.maxEntries" -> "4000",
+    "spark.sql.codegen.useIdInClassName" -> "false",
   )
 
   /** Build the session all entrypoints share. The master is whatever
@@ -2085,41 +2094,38 @@ object SparkEntry {
       // window re-ran ~10× per evaluation and the gate battery ~5×
       // (measured r14, cold-isolated BenchOne at sf0.1: 24.0 s → 13.5 s
       // with the three persists).
-      // The persisted frames are intra-query scratch: ScratchCache.arm at
-      // the bottom releases them on the caller's first consuming action,
-      // so nothing outlives the query — and at warehouse scale avoiding
-      // ~10 re-parses of the crawl for three disk-backed text frames is
-      // the same trade the measure-then-choose reassembly family makes.
+      // The three stage frames are local checkpoints: intra-query scratch
+      // that never enters the CacheManager, whose blocks Spark's
+      // ContextCleaner frees once the returned frame that reads them is
+      // gone — and at warehouse scale avoiding ~10 re-parses of the crawl
+      // for three disk-backed text frames is the same trade the
+      // measure-then-choose reassembly family makes.
       val base = ext.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn", "url_canon")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val bench = base.filter(col("doc_id") % 50 === 0).select(col("doc_id"), col("text"))
       val gated = base.filter(TextOps.gopherPass(col("text"), sep = " the ",
         minWords = 20, minStopHits = 1))
       val curated = ops.Curate.curate(gated, "text", "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val nearDeduped = Dedup.nearDupKeepFirst(curated, "text", "doc_id",
         numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.8)
       val exact = TextOps.decontaminate(nearDeduped, bench, "text", "doc_id",
         n = 5, minOverlap = 1)
       val cleaned = Dedup.fuzzyDecontaminate(exact, bench, "text", "doc_id",
           numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val split = Dedup.leakageSafeSplit(cleaned, "text", "doc_id",
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05), salt = "r9e",
         numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5)
       val train = cleaned.join(
         split.filter(col("split") === "train").select("doc_id"), Seq("doc_id"))
-      val result = TextOps.packChunks(
+      TextOps.packChunks(
           TextOps.chunkTokens(train, "text", "doc_id", chunkSize = 64, overlap = 16),
           "doc_id", budget = 256, groups = 8, salt = "r9e")
         .join(base.select(col("doc_id"), col("domain")), Seq("doc_id"))
         .select(col("doc_id"), col("domain"), col("chunk_idx"),
           col("n_tokens"), col("pack_group"), col("seq_idx"))
-      // armed AFTER all eager construction jobs: the watermark guarantees
-      // only a LATER (caller) action releases the scratch group
-      ops.ScratchCache.arm(s, base, curated, cleaned)
-      result
     }),
 
     "q_text_repetition" -> ((s, dir) => {

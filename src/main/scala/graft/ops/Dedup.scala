@@ -1894,9 +1894,10 @@ object Dedup {
     * one task. All exchanges are hash exchanges; no global sort.
     *
     * `broadcastMaxPositions` is the reassembly's measure-then-choose
-    * broadcast bound (see [[reassembleFromPositions]]); `<= 0` keeps the
-    * fully-lazy legacy plan — no Spark action runs at plan-construction
-    * time, the escape lazy-composition and stream-static callers need.
+    * broadcast bound (see [[reassembleFromPositions]]); `<= 0` never
+    * broadcasts: the same changed-set side merges, and no Spark action
+    * runs at plan-construction time — the escape lazy-composition and
+    * stream-static callers need.
     */
   def paragraphDedup(
       docs: DataFrame,
@@ -1958,8 +1959,9 @@ object Dedup {
     * documents reassemble to their own text verbatim, split+join being
     * the identity), one aggregate learns its true positions payload, and
     * the reassembly broadcasts when it fits `broadcastMaxPositions` —
-    * document text then never shuffles or sorts. Above the bound the
-    * gated side merges through the pinned spill-safe SMJ. History of the
+    * document text then never shuffles or sorts. Above the bound, and
+    * with a bound `<= 0` (nothing measured, no action at construction),
+    * the gated side merges through the pinned spill-safe SMJ. History of the
     * pins this replaces, all still binding on the fallback path: leaving
     * the strategy to size ESTIMATES measurably breaks it (at the sf100
     * rung the incremental row's estimator flipped to BROADCASTING the
@@ -1982,60 +1984,52 @@ object Dedup {
         count(when(!col("__keep"), lit(1))).as("n_paras_removed"))
     val parr = split(coalesce(col(textCol), lit("")),
       java.util.regex.Pattern.quote(sep))
-    if (broadcastMaxPositions <= 0) {
-      // legacy full-side reassembly (no plan-time action): every document
-      // joins its kept positions through the pinned spill-safe merge
-      docs
-        .select(col(idCol), parr.as("__parr"))
-        .join(kept.hint("merge"), Seq(idCol))
-        .select(col(idCol),
-          array_join(
-            transform(col("__kept"), p => get(col("__parr"), p)), sep)
-            .as("text_dedup"),
-          col("n_paras_kept"), col("n_paras_removed"))
-    } else {
-      // changed-set gating (round 13 — the sf300 lesson): a document with
-      // ZERO removed paragraphs reassembles to its own text verbatim
-      // (split-on-sep + join-with-sep is the identity), so only documents
-      // that actually LOST a paragraph need to meet their positions in a
-      // join. That side is duplication-sized, not corpus-sized — measure
-      // it (one aggregate over the persisted byte-small positions rows)
-      // and broadcast when the payload fits, so document text shuffles
-      // and sorts ZERO times; at sf300 the old full-side merge sorted the
-      // multi-GB text side with >40 GB of spill (6.6x wall for 3x docs).
-      // Above the bound — near-template corpora where most documents lose
-      // paragraphs — fall back to the pinned merge over the SAME gated
-      // side (still strictly smaller than the full side the legacy path
-      // sorts; never estimator-chosen, never an unspillable hash build).
-      val changed = kept.filter(col("n_paras_removed") > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val m = changed.agg(
-        coalesce(sum(size(col("__kept"))), lit(0)).cast("long"),
-        count(lit(1))).collect().head
-      val positions = m.getLong(0)
-      log.info(s"reassembleFromPositions: changed_docs=${m.getLong(1)} " +
-        s"kept_positions=$positions (broadcast bound $broadcastMaxPositions)")
-      // the measurement above was the only in-function action; the first
-      // caller action over the returned reassembly auto-releases the
-      // changed-set cache (ScratchCache), so pipeline-staged sessions
-      // don't accumulate one pinned positions frame per dedup pass
-      ScratchCache.arm(docs.sparkSession, changed)
-      val side =
-        if (positions <= broadcastMaxPositions) broadcast(changed)
-        else changed.hint("merge")
-      docs
-        .select(col(idCol), coalesce(col(textCol), lit("")).as("__t"),
-          parr.as("__parr"))
-        .join(side, Seq(idCol), "left")
-        .select(col(idCol),
-          when(col("__kept").isNull, col("__t"))
-            .otherwise(
-              array_join(transform(col("__kept"), p => get(col("__parr"), p)), sep))
-            .as("text_dedup"),
-          coalesce(col("n_paras_kept"), size(col("__parr")).cast("long"))
-            .as("n_paras_kept"),
-          coalesce(col("n_paras_removed"), lit(0L)).as("n_paras_removed"))
-    }
+    // changed-set gating (round 13 — the sf300 lesson): a document with
+    // ZERO removed paragraphs reassembles to its own text verbatim
+    // (split-on-sep + join-with-sep is the identity), so only documents
+    // that actually LOST a paragraph need to meet their positions in a
+    // join. That side is duplication-sized, not corpus-sized — measure
+    // it (one aggregate over the checkpointed byte-small positions rows)
+    // and broadcast when the payload fits, so document text shuffles
+    // and sorts ZERO times; at sf300 the old full-side merge sorted the
+    // multi-GB text side with >40 GB of spill (6.6x wall for 3x docs).
+    // Above the bound — near-template corpora where most documents lose
+    // paragraphs — and when `broadcastMaxPositions <= 0` (never
+    // broadcast, nothing measured) the SAME gated side merges through
+    // the pinned spill-safe SMJ (never estimator-chosen, never an
+    // unspillable hash build).
+    val changed = kept.filter(col("n_paras_removed") > 0)
+    val side =
+      if (broadcastMaxPositions <= 0) changed.hint("merge")
+      else {
+        // the local checkpoint stays out of the CacheManager: its blocks
+        // live as long as the returned reassembly reads them, and Spark's
+        // ContextCleaner frees them once that frame is gone, so
+        // pipeline-staged sessions don't accumulate one pinned positions
+        // frame per dedup pass
+        val measured = changed.localCheckpoint(false,
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val m = measured.agg(
+          coalesce(sum(size(col("__kept"))), lit(0)).cast("long"),
+          count(lit(1))).collect().head
+        val positions = m.getLong(0)
+        log.info(s"reassembleFromPositions: changed_docs=${m.getLong(1)} " +
+          s"kept_positions=$positions (broadcast bound $broadcastMaxPositions)")
+        if (positions <= broadcastMaxPositions) broadcast(measured)
+        else measured.hint("merge")
+      }
+    docs
+      .select(col(idCol), coalesce(col(textCol), lit("")).as("__t"),
+        parr.as("__parr"))
+      .join(side, Seq(idCol), "left")
+      .select(col(idCol),
+        when(col("__kept").isNull, col("__t"))
+          .otherwise(
+            array_join(transform(col("__kept"), p => get(col("__parr"), p)), sep))
+          .as("text_dedup"),
+        coalesce(col("n_paras_kept"), size(col("__parr")).cast("long"))
+          .as("n_paras_kept"),
+        coalesce(col("n_paras_removed"), lit(0L)).as("n_paras_removed"))
   }
 
   /** The paragraph digest STORE: one row per distinct non-blank
@@ -2073,7 +2067,7 @@ object Dedup {
     * partitioning on `__wkey` is exactly what the first-occurrence
     * window needs, so no extra exchange appears between them.
     * Everything else matches the batch operator, including
-    * `broadcastMaxPositions` (`<= 0` = fully-lazy legacy plan, no
+    * `broadcastMaxPositions` (`<= 0` = never broadcast, no
     * plan-construction-time action).
     */
   def paragraphDedupIncrement(

@@ -700,10 +700,9 @@ object TextOps {
       maxCandidatePairs: Long = 2000000000L,
   ): DataFrame = {
     require(minShared >= 1, "minShared must be >= 1")
+    require(maxBucketSize > 0, "maxBucketSize must be positive")
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    val inv = Dedup.dropOverfullBuckets(
-      docs.select(col(idCol), explode(fingerprintWinnow(col(textCol), k, w)).as("__h")),
-      Seq("__h"), maxBucketSize, "winnowOverlap", logMetric = false)
+    val idx = docs.select(col(idCol), explode(fingerprintWinnow(col(textCol), k, w)).as("__h"))
     // fail-loud candidate-volume guard (the dropOverfullBuckets pattern
     // lifted to PAIR level): one aggregation over the byte-small inverted
     // index measures the self-join's exact emission Σ C(bucket, 2) BEFORE
@@ -712,23 +711,29 @@ object TextOps {
     // Cost: one fingerprint scan + a map-combinable agg — O(n), measured
     // from this call's own input. maxCandidatePairs <= 0 disables
     // (audit-scale escape hatch, deliberate and in writing).
-    if (maxCandidatePairs > 0) {
+    val (inv, anyOverfull) = if (maxCandidatePairs <= 0) (idx, true) else {
       // the guard scans the index twice (emission agg + the join) —
-      // persist the byte-small (id, hash) rows so the md5 fingerprint pass
-      // over the corpus is paid ONCE (spills to disk if the index outgrows
-      // memory; ~16 B/fingerprint)
-      inv.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // n·(n−1) summed as LONG (SQL `/` would promote to double), halved
-      // exactly in Scala — n·(n−1) is always even
-      val vol = inv.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
-        .agg(coalesce(sum(col("__n") * (col("__n") - 1)), lit(0L)))
-        .collect().head.getLong(0) / 2
+      // checkpoint the byte-small (id, hash) rows so the md5 fingerprint
+      // pass over the corpus is paid ONCE (spills to disk if the index
+      // outgrows memory; ~16 B/fingerprint). A local checkpoint is never
+      // registered in the CacheManager: its blocks live exactly as long as
+      // the frame that reads them — the returned join, or nothing on a
+      // refusal — and Spark's ContextCleaner frees them once it is gone
+      val inv = idx.localCheckpoint(false,
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // buckets over maxBucketSize never reach the join (dropOverfullBuckets
+      // below), so they emit nothing; n·(n−1) summed as LONG (SQL `/` would
+      // promote to double), halved exactly in Scala — n·(n−1) is always
+      // even. The same pass counts the over-full buckets: with none (the
+      // healthy corpus) the drop never enters the plan
+      val m = inv.groupBy(col("__h")).agg(count(lit(1)).as("__n"))
+        .agg(
+          coalesce(sum(when(col("__n") <= maxBucketSize, col("__n") * (col("__n") - 1))), lit(0L)),
+          count(when(col("__n") > maxBucketSize, lit(1))))
+        .collect().head
+      val vol = m.getLong(0) / 2
       log.info(s"winnowOverlap: candidate_pairs=$vol (guard ceiling $maxCandidatePairs)")
-      if (vol > maxCandidatePairs) {
-        // a refused run returns no plan that could ever consume the
-        // scratch — release it before failing or the refusal would pin
-        // the whole inverted index in a long-lived session
-        inv.unpersist(blocking = false)
+      if (vol > maxCandidatePairs)
         throw new IllegalArgumentException(
           s"winnowOverlap: the fingerprint self-join would emit $vol candidate pairs " +
             s"(> $maxCandidatePairs allowed) — the measured n² frontier (SCALING_r12 §4). " +
@@ -737,10 +742,7 @@ object TextOps {
             "route near-template corpora through the banded near-dup operators " +
             "(Dedup.minHashNearDups / simHashNearDupsWide), or raise/disable " +
             "maxCandidatePairs deliberately for an audit-scale run.")
-      }
-      // auto-release: the guard scan above was the last in-function use;
-      // the first caller action over the returned join releases the index
-      ScratchCache.arm(docs.sparkSession, inv)
+      (inv, m.getLong(1) > 0)
     }
     // pinned-exchange self-join (the embeddingNearDups treatment): the
     // inverted index is byte-small while the hash-bucket self-join's
@@ -751,9 +753,14 @@ object TextOps {
     // task count. On near-template corpora this operator is candidate-
     // quadratic BY SHAPE (shared fingerprints grow with the corpus —
     // measured frontier, SCALING_r12 §2); the pin makes its cost
-    // deterministic, not linear.
+    // deterministic, not linear. The over-full-bucket window, when needed,
+    // runs on the same hash partitioning, so the index shuffles once, after
+    // the checkpoint (a checkpoint does not carry its partitioning forward).
     val np = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val pinned = inv.repartition(np, col("__h")).hint("merge")
+    val byHash = inv.repartition(np, col("__h"))
+    val pinned = (if (!anyOverfull) byHash
+      else Dedup.dropOverfullBuckets(byHash, Seq("__h"), maxBucketSize,
+        "winnowOverlap", logMetric = false)).hint("merge")
     pinned.as("a").join(pinned.as("b"),
         col("a.__h") === col("b.__h") &&
           col(s"a.$idCol") < col(s"b.$idCol"))
@@ -965,7 +972,8 @@ object TextOps {
     * ProbeSpan measures at ~0.33% of shingle positions across three
     * decades (sf1/sf30/sf100: 0.321%/0.333%/0.353% — linear payload,
     * SCALING_r13) — so the reassembly join MEASURES it (one aggregate
-    * over the persisted byte-small side) and broadcasts when the total
+    * over the locally checkpointed byte-small side, whose blocks live as
+    * long as the returned frame) and broadcasts when the total
     * duplicated-position payload fits `broadcastMaxPositions`: document
     * text then shuffles and sorts ZERO times (the sf100 sort of the
     * multi-GB text side was the row's dominant cost). Above the bound —
@@ -1067,24 +1075,24 @@ object TextOps {
         val n = dh.count()
         log.info(s"dedupSpans: dup_hashes=$n (broadcast cutoff $dupHashBroadcastMax)")
         // measure-then-choose on the reassembly join (the winnowOverlap
-        // guard discipline, join-side edition): persist the df-gated side
-        // — (id, positions) longs only, never text — and pay one aggregate
-        // to learn its TRUE size before choosing the strategy
+        // guard discipline, join-side edition): checkpoint the df-gated
+        // side — (id, positions) longs only, never text — and pay one
+        // aggregate to learn its TRUE size before choosing the strategy.
+        // The local checkpoint stays out of the CacheManager; its blocks
+        // are freed by Spark's ContextCleaner with the returned frame
         val p = startsOf(if (n <= dupHashBroadcastMax) broadcast(dh) else dh)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val m = p.agg(coalesce(sum(size(col("__starts"))), lit(0)).cast("long"),
           count(lit(1))).collect().head
         val positions = m.getLong(0)
         log.info(s"dedupSpans: dup_positions=$positions dup_docs=${m.getLong(1)} " +
           s"(broadcast bound $broadcastMaxPositions)")
-        // the measure above fully materialized the starts cache, so the
-        // dup-hash set has no consumers left anywhere — release it NOW,
-        // in-function (only starts outlives plan construction; the first
-        // caller action auto-releases it). `dh` is the unhinted frame: the
-        // broadcast() hint wraps the plan, and only `dh` matches its
-        // CacheManager entry
+        // the measure above fully materialized the starts checkpoint, so
+        // the dup-hash set has no consumers left anywhere — release it NOW,
+        // in-function (only the checkpoint outlives plan construction).
+        // `dh` is the unhinted frame: the broadcast() hint wraps the plan,
+        // and only `dh` matches its CacheManager entry
         dh.unpersist(blocking = false)
-        ScratchCache.arm(docs.sparkSession, p)
         (p, positions <= broadcastMaxPositions)
       }
     val toks = tokens(col(textCol))

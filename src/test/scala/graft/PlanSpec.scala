@@ -480,18 +480,28 @@ class PlanSpec extends AnyFunSuite {
 
   test("span dedup: hash-only inverted index, no cartesian, pruned scan") {
     graft.functions.GraftFunctions.register(spark)
+    // the default path checkpoints the measured starts side at
+    // construction, so its plan only reads it back; broadcastMaxPositions
+    // = 0 builds the same df gate and starts side inside one plan
+    val lazyPlan = plan(graft.ops.TextOps.dedupSpans(docs, "text", "doc_id",
+      broadcastMaxPositions = 0L))
     val p = plan(graft.ops.TextOps.dedupSpans(docs, "text", "doc_id"))
-    assert(!p.contains("CartesianProduct"), p)
-    // the scan reads exactly the two columns the operator touches
-    assert(p.contains("ReadSchema: struct<doc_id:bigint,text:string>"), p)
+    for (q <- Seq(lazyPlan, p)) {
+      assert(!q.contains("CartesianProduct"), q)
+      // the scan reads exactly the two columns the operator touches
+      assert(q.contains("ReadSchema: struct<doc_id:bigint,text:string>"), q)
+    }
     // the document-frequency side never exchanges text: every
     // hashpartitioning key set is over ids/positions/hashes (longs/ints)
-    val exchanges = "Exchange hashpartitioning\\(([^)]*)\\)".r
-      .findAllMatchIn(p).map(_.group(1)).toList
-    assert(exchanges.nonEmpty, p)
-    val textExchanges = exchanges.filter(_.contains("text#"))
-    // text participates in exactly one exchange: the final starts join
-    assert(textExchanges.size <= 1, s"text shuffled ${textExchanges.size}x:\n$p")
+    def exchanges(q: String) = "Exchange hashpartitioning\\(([^)]*)\\)".r
+      .findAllMatchIn(q).map(_.group(1)).toList
+    assert(exchanges(lazyPlan).nonEmpty, lazyPlan)
+    // text participates in at most one exchange: the merged starts join
+    val textExchanges = exchanges(lazyPlan).filter(_.contains("text#"))
+    assert(textExchanges.size <= 1, s"text shuffled ${textExchanges.size}x:\n$lazyPlan")
+    // measured under the broadcast bound, text never shuffles
+    assert(p.contains("BroadcastHashJoin"), p)
+    assert(!exchanges(p).exists(_.contains("text#")), p)
   }
 
   test("vocab coverage: TakeOrdered head, no full sort of the count table") {
@@ -502,26 +512,33 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("paragraph dedup: salted-key window, text shuffles once on the id") {
+    // the default path checkpoints the measured changed side at
+    // construction, so its plan only reads it back; broadcastMaxPositions
+    // = 0 builds the same window and changed side inside one plan
+    val lazyPlan = plan(graft.ops.Dedup.paragraphDedup(docs, "text", "doc_id",
+      broadcastMaxPositions = 0L))
     val p = plan(graft.ops.Dedup.paragraphDedup(docs, "text", "doc_id"))
     // the keep/drop window shuffles on the salted key (text is projected
     // out before the window; blanks never share the md5("") partition)
-    assert(p.contains("hashpartitioning(__wkey"), p)
-    // round 13: the reassembly side is gated to CHANGED documents and
-    // measured — under the broadcast bound the text side joins through a
-    // BroadcastHashJoin and NEVER shuffles (zero text-carrying hash
-    // exchanges); the only hash exchanges are the integer/digest-keyed
-    // window + kept-position agg (counted once live and once inside the
-    // persisted changed-side's InMemoryRelation rendering, hence <= 4).
-    // The old (id, pos)-keyed flag join that shuffled exploded text is
-    // gone.
+    assert(lazyPlan.contains("hashpartitioning(__wkey"), lazyPlan)
+    // round 13: the reassembly side is gated to CHANGED documents; the
+    // only hash exchanges are the integer/digest-keyed window, the
+    // kept-position agg and, without a broadcast, the one id-keyed text
+    // exchange of the merge. The old (id, pos)-keyed flag join that
+    // shuffled exploded text is gone.
+    def textHashEx(q: String) = "Exchange hashpartitioning\\(([^)]*)\\)".r
+      .findAllMatchIn(q).map(_.group(1)).filter(_.contains("text#")).toList
+    assert(textHashEx(lazyPlan).size <= 1, lazyPlan)
+    assert("Exchange hashpartitioning".r.findAllIn(lazyPlan).size <= 4, lazyPlan)
+    // measured under the broadcast bound, the text side joins through a
+    // BroadcastHashJoin and NEVER shuffles
     assert(p.contains("BroadcastHashJoin"), p)
-    val textHashEx = "Exchange hashpartitioning\\(([^)]*)\\)".r
-      .findAllMatchIn(p).map(_.group(1)).filter(_.contains("text#")).toList
-    assert(textHashEx.isEmpty, s"text hash-shuffled: $textHashEx\n$p")
-    assert("Exchange hashpartitioning".r.findAllIn(p).size <= 4, p)
-    assert(!"hashpartitioning\\(doc_id#\\d+L?, __pos".r.findAllIn(p).hasNext, p)
-    assert(!p.contains("Exchange rangepartitioning"), p)
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"), p)
+    assert(textHashEx(p).isEmpty, s"text hash-shuffled: ${textHashEx(p)}\n$p")
+    for (q <- Seq(lazyPlan, p)) {
+      assert(!"hashpartitioning\\(doc_id#\\d+L?, __pos".r.findAllIn(q).hasNext, q)
+      assert(!q.contains("Exchange rangepartitioning"), q)
+      assert(!q.contains("CartesianProduct") && !q.contains("BroadcastNestedLoopJoin"), q)
+    }
   }
 
   test("D4: prototypicality is a shuffle-free scan; diversify adds ONE cell exchange") {

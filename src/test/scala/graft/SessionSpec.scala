@@ -16,8 +16,10 @@ class SessionSpec extends AnyFunSuite {
     assert(c("spark.sql.adaptive.coalescePartitions.enabled") == "true")
     assert(c("spark.sql.shuffle.partitions") == "7")
     assert(c("spark.sql.session.timeZone") == "UTC")
-    // static: fixed by the JVM's first session (SparkEntry.pinnedStaticConfs)
+    // codegen (SparkEntry.pinnedCodegenConfs); the cache size is static,
+    // fixed by the JVM's first session
     assert(c("spark.sql.codegen.cache.maxEntries") == "4000")
+    assert(c("spark.sql.codegen.useIdInClassName") == "false")
   }
 
   test("SparkEntry.session builds with every pinned conf applied") {

@@ -181,6 +181,9 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
     // write and the read in TWO SEPARATE JVMs (derby is also
     // single-process, which forking sidesteps).
     val wh = tempDir("graft-wh-")
+    // each child's Hive session leaves a `<uuid>_resources` directory in
+    // its temp dir: keep those inside a directory this test deletes
+    val childTmp = tempDir("graft-jvm-tmp-")
     val java17 = System.getProperty("java.home") + "/bin/java"
     val cp = System.getProperty("java.class.path")
     val addOpens = Seq(
@@ -194,7 +197,7 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
     ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     def phase(args: String*): String = {
       val cmd = Seq(java17) ++ addOpens ++
-        Seq("-Xmx2g", "-Dspark.ui.enabled=false", "-cp", cp,
+        Seq("-Xmx2g", "-Dspark.ui.enabled=false", s"-Djava.io.tmpdir=$childTmp", "-cp", cp,
           "graft.tools.BucketedCatalog") ++ args
       val out = new StringBuilder
       val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()

@@ -4,13 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One shared local session for all Spark-backed suites. */
 object SparkSpec {
-  /** Built with the static confs SparkEntry pins (the codegen class cache
-    * size): the first session in a JVM fixes those, so a later
-    * `SparkEntry.session` cannot apply them to this one.
+  /** Built with the codegen confs SparkEntry pins: the first session in a
+    * JVM fixes the class cache size, so a later `SparkEntry.session`
+    * cannot apply it to this one.
     */
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
-      .config(SparkEntry.pinnedStaticConfs)
+      .config(SparkEntry.pinnedCodegenConfs)
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
