@@ -2099,7 +2099,14 @@ object SparkEntry {
       // ContextCleaner frees once the returned frame that reads them is
       // gone — and at warehouse scale avoiding ~10 re-parses of the crawl
       // for three disk-backed text frames is the same trade the
-      // measure-then-choose reassembly family makes.
+      // measure-then-choose reassembly family makes. That trade is
+      // Dedup.Materialize.Local's: the blocks live in executor storage
+      // only, so on a real cluster an executor loss after a checkpoint
+      // kills the job; and they are corpus-scale TEXT that stays on local
+      // disk until a driver GC collects the returned frame
+      // (spark.cleaner.periodicGC.interval, 30 min by default), not after
+      // the first action — a long-lived session that builds this row
+      // again and again holds every generation's copy until then.
       val base = ext.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn", "url_canon")
         .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

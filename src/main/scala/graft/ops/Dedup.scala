@@ -1898,6 +1898,16 @@ object Dedup {
     * broadcasts: the same changed-set side merges, and no Spark action
     * runs at plan-construction time — the escape lazy-composition and
     * stream-static callers need.
+    *
+    * Fault tolerance and retention: with a bound above 0 the measured
+    * changed-set side is a `localCheckpoint` — the [[Materialize.Local]]
+    * trade. Its blocks live in executor storage only and its lineage is
+    * truncated, so on a real cluster an executor loss after the
+    * checkpoint kills the job rather than recomputing the side. The
+    * blocks stay for as long as the returned frame is reachable; Spark's
+    * ContextCleaner frees them only after a driver GC has collected that
+    * frame (`spark.cleaner.periodicGC.interval`, 30 min by default), not
+    * after the first action. A bound `<= 0` checkpoints nothing.
     */
   def paragraphDedup(
       docs: DataFrame,
@@ -2068,7 +2078,8 @@ object Dedup {
     * window needs, so no extra exchange appears between them.
     * Everything else matches the batch operator, including
     * `broadcastMaxPositions` (`<= 0` = never broadcast, no
-    * plan-construction-time action).
+    * plan-construction-time action) and the fault-tolerance and
+    * retention trade of its checkpointed side.
     */
   def paragraphDedupIncrement(
       batch: DataFrame,

@@ -610,19 +610,6 @@ object TextOps {
         s => graft.functions.GraftFunctions.md5Long60(s.cast("binary"))),
       w)
 
-  /** Winnow-fingerprint overlap: pairs of documents sharing at least
-    * `minShared` winnowed hashes — near-dup / plagiarism CANDIDATES from
-    * fingerprints alone, at ~2/(w+1) the inverted-index rows a
-    * full-shingle overlap would cost. The winnowing guarantee bounds what
-    * the thinning can miss: any shared run of `w + k - 1` or more tokens
-    * still collides; only shorter overlaps can escape.
-    *
-    * Scale shape: the inverted index carries (id, hash) longs only
-    * (fingerprints are already distinct per doc); the self-join keys on
-    * the hash, with the shared [[Dedup.dropOverfullBuckets]] safety valve
-    * capping a pathological hash before the join turns quadratic; the
-    * pair aggregate is map-side combinable.
-    */
   /** Candidate-volume model constants for [[winnowConfigFor]], calibrated
     * on ProbeWinnow's measured counts (SCALING_r12 §4) at the default
     * window w₀ = 4: candidates / n² was 1.4527e-5 at sf30 (1.5M docs,
@@ -689,6 +676,29 @@ object TextOps {
     WinnowCalibDensity * n.toDouble * n *
       math.pow((WinnowCalibW + 1).toDouble / (w + 1), WinnowCalibAlpha)
 
+  /** Winnow-fingerprint overlap: pairs of documents sharing at least
+    * `minShared` winnowed hashes — near-dup / plagiarism CANDIDATES from
+    * fingerprints alone, at ~2/(w+1) the inverted-index rows a
+    * full-shingle overlap would cost. The winnowing guarantee bounds what
+    * the thinning can miss: any shared run of `w + k - 1` or more tokens
+    * still collides; only shorter overlaps can escape.
+    *
+    * Scale shape: the inverted index carries (id, hash) longs only
+    * (fingerprints are already distinct per doc); the self-join keys on
+    * the hash, with the shared [[Dedup.dropOverfullBuckets]] safety valve
+    * capping a pathological hash before the join turns quadratic; the
+    * pair aggregate is map-side combinable.
+    *
+    * Fault tolerance and retention: with the guard on, the inverted index
+    * is a `localCheckpoint` — the [[Dedup.Materialize.Local]] trade. Its
+    * blocks live in executor storage only and its lineage is truncated,
+    * so on a real cluster an executor loss after the checkpoint kills the
+    * job rather than recomputing the index. The blocks stay for as long
+    * as the returned frame is reachable, so every action on it reads them;
+    * Spark's ContextCleaner frees them only after a driver GC has
+    * collected that frame (`spark.cleaner.periodicGC.interval`, 30 min by
+    * default), not after the first action.
+    */
   def winnowOverlap(
       docs: DataFrame,
       textCol: String,
@@ -756,6 +766,9 @@ object TextOps {
     // deterministic, not linear. The over-full-bucket window, when needed,
     // runs on the same hash partitioning, so the index shuffles once, after
     // the checkpoint (a checkpoint does not carry its partitioning forward).
+    // The window then runs once per join side; running it once instead
+    // (behind a second checkpoint, or as a broadcast anti-join on the
+    // over-full keys) adds a job and a shuffle and measured slower.
     val np = docs.sparkSession.sessionState.conf.numShufflePartitions
     val byHash = inv.repartition(np, col("__h"))
     val pinned = (if (!anyOverfull) byHash
@@ -985,6 +998,16 @@ object TextOps {
     * covered-position test is a per-row higher-order filter over the
     * compact sorted starts array. Callers must `GraftFunctions.register`
     * the session (native `word_shingles`).
+    *
+    * Fault tolerance and retention: with a bound above 0 the starts side
+    * is a `localCheckpoint` — the [[Dedup.Materialize.Local]] trade. Its
+    * blocks live in executor storage only and its lineage is truncated,
+    * so on a real cluster an executor loss after the checkpoint kills the
+    * job rather than recomputing the side. The blocks stay for as long as
+    * the returned frame is reachable; Spark's ContextCleaner frees them
+    * only after a driver GC has collected that frame
+    * (`spark.cleaner.periodicGC.interval`, 30 min by default), not after
+    * the first action. `broadcastMaxPositions <= 0` checkpoints nothing.
     */
   def dedupSpans(
       docs: DataFrame,

@@ -2493,6 +2493,41 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     assert(auto == fixed)
   }
 
+  test("winnowOverlap drops over-full buckets and leaves them out of the guard's volume") {
+    // docs 0-4 open with one boilerplate run, so each of its fingerprints
+    // sits in a 5-row bucket, over the cap of 3; docs 0 and 1 also share a
+    // run of their own, docs 5-7 share one (buckets of exactly the cap) and
+    // docs 8 and 9 one more. Pairs among 0-4 other than (0, 1) share only
+    // the boilerplate, so only over-full buckets could emit them
+    def run(tag: String) = (1 to 30).map(i => s"$tag$i").mkString(" ")
+    val boiler = run("b")
+    val corpus = Seq(
+      0L -> s"$boiler ${run("p")}", 1L -> s"$boiler ${run("p")}",
+      2L -> boiler, 3L -> boiler, 4L -> boiler,
+      5L -> run("q"), 6L -> run("q"), 7L -> run("q"),
+      8L -> s"${run("r")} ${run("s")}", 9L -> s"${run("u")} ${run("r")}",
+    ).toDF("doc_id", "text")
+    val sizes = corpus.select(explode(TextOps.fingerprintWinnow(col("text"))).as("h"))
+      .groupBy("h").count().collect().map(_.getLong(1))
+    assert(sizes.contains(5L) && sizes.contains(3L))
+    val kept = sizes.filter(_ <= 3).map(n => n * (n - 1) / 2).sum
+    assert(sizes.map(n => n * (n - 1) / 2).sum > kept)
+    def pairs(ceiling: Long) = TextOps.winnowOverlap(corpus, "text", "doc_id",
+        maxBucketSize = 3, maxCandidatePairs = ceiling)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // a ceiling of exactly the kept buckets' volume passes, one below it
+    // refuses: the over-full buckets never count toward the guard
+    val got = pairs(kept)
+    assert(got.map(p => (p._1, p._2)) == Set((0L, 1L), (5L, 6L), (5L, 7L), (6L, 7L), (8L, 9L)))
+    val e = intercept[IllegalArgumentException](pairs(kept - 1))
+    assert(e.getMessage.contains(s"would emit $kept candidate pairs"))
+    // the unmeasured path drops the same buckets and returns the same rows
+    assert(pairs(-1L) == got)
+    // under the default cap the boilerplate pairs do flow
+    assert(TextOps.winnowOverlap(corpus, "text", "doc_id").collect()
+      .exists(r => r.getLong(0) == 2L && r.getLong(1) == 3L))
+  }
+
   test("per-group quantile gate: median cutoff per group, nulls never pass") {
     val df = Seq(
       (0L, Some("en"), Some(10)), (1L, Some("en"), Some(20)),
