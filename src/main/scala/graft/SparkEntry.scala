@@ -78,6 +78,11 @@ object SparkEntry {
     // where candidate-sized exchanges are genuinely unavoidable and
     // executor sizing must own the trade.
     "spark.sql.autoBroadcastJoinThreshold" -> (256 * 1024 * 1024).toString,
+    // Scratch frames are reliable checkpoints when the session has a
+    // checkpoint directory (ops.Scratch). Spark keeps their files after the
+    // frame is gone unless this is on; with it, ContextCleaner deletes them
+    // with the frame, as it frees a local checkpoint's blocks.
+    "spark.cleaner.referenceTracking.cleanCheckpoints" -> "true",
   ) ++ pinnedCodegenConfs
 
   /** The codegen confs of [[pinnedConfs]], which the test suite's shared
@@ -543,12 +548,14 @@ object SparkEntry {
     lit("</h1><p>"), col("text"),
     lit("</p><p>Footer &copy; 2024&nbsp;Example &lt;inc&gt;</p></body></html>"))
 
-  /** Deterministic messy-URL synthesis for the canonicalization rows:
-    * mixed-case scheme/host, default ports, empty paths, tracking
-    * params in varying order, fragments — every rule of
-    * [[ops.TextOps.canonicalUrl]] exercised, SQL-mirrorable.
+  /** Deterministic messy-URL synthesis: mixed-case scheme/host, default
+    * ports, tracking params in varying order, fragments — every rule of
+    * [[ops.TextOps.canonicalUrl]] exercised, SQL-mirrorable
+    * ([[oracleUrl]]). The canonicalization rows take [[messyPath]], whose
+    * empty paths add one more rule; the e2e crawl fixture takes
+    * [[e2ePath]], which keeps the document id recoverable from every URL.
     */
-  private def messyUrl: Column = {
+  private def syntheticUrl(path: Column): Column = {
     val host = element_at(array(lit("Example.COM"), lit("WWW.News-Site.ORG"),
       lit("Docs.Example.COM"), lit("example.com")),
       (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
@@ -556,14 +563,16 @@ object SparkEntry {
     val port = when(pmod(col("doc_id"), lit(3)) === 0,
       when(pmod(col("doc_id"), lit(2)) === 0, lit(":443")).otherwise(lit(":80")))
       .otherwise(lit(""))
-    val path = when(pmod(col("doc_id"), lit(5)) === 0, lit(""))
-      .otherwise(concat(lit("/Articles/"), col("doc_id")))
     val query = element_at(array(lit("?utm_source=feed&b=2&a=1"),
       lit("?z=9&a=1&utm_campaign=x"), lit("?gclid=abc"), lit(""), lit("?b=2&a=1")),
       (pmod(col("doc_id"), lit(5)) + 1).cast("int"))
     val frag = when(pmod(col("doc_id"), lit(2)) === 1, lit("#section-2")).otherwise(lit(""))
     concat(scheme, lit("://"), host, port, path, query, frag)
   }
+
+  private def e2ePath: Column = concat(lit("/Articles/"), col("doc_id"))
+  private def messyPath: Column = when(pmod(col("doc_id"), lit(5)) === 0, lit("")).otherwise(e2ePath)
+  private def messyUrl: Column = syntheticUrl(messyPath)
 
   /** WARC fixture, serialized once per sf dir: the documents table as
     * real multi-file ISO 28500 WARC conversion records (4 files, so the
@@ -586,43 +595,10 @@ object SparkEntry {
         .write.mode("overwrite").option("lineSep", "\r\n").text(s"$store/wet")
     }
 
-  /** [[messyUrl]] with the path ALWAYS present (`/Articles/{doc_id}`):
-    * the e2e crawl fixture needs the document id recoverable from every
-    * record's URL, while keeping the case/port/params/fragment mess that
-    * exercises canonicalization.
-    */
-  private def e2eUrl: Column = {
-    val host = element_at(array(lit("Example.COM"), lit("WWW.News-Site.ORG"),
-      lit("Docs.Example.COM"), lit("example.com")),
-      (pmod(col("doc_id"), lit(4)) + 1).cast("int"))
-    val scheme = when(pmod(col("doc_id"), lit(2)) === 0, lit("HTTPS")).otherwise(lit("http"))
-    val port = when(pmod(col("doc_id"), lit(3)) === 0,
-      when(pmod(col("doc_id"), lit(2)) === 0, lit(":443")).otherwise(lit(":80")))
-      .otherwise(lit(""))
-    val query = element_at(array(lit("?utm_source=feed&b=2&a=1"),
-      lit("?z=9&a=1&utm_campaign=x"), lit("?gclid=abc"), lit(""), lit("?b=2&a=1")),
-      (pmod(col("doc_id"), lit(5)) + 1).cast("int"))
-    val frag = when(pmod(col("doc_id"), lit(2)) === 1, lit("#section-2")).otherwise(lit(""))
-    concat(scheme, lit("://"), host, port, lit("/Articles/"), col("doc_id"), query, frag)
-  }
-
-  /** The SQL mirror of [[e2eUrl]] (== oracleMessyUrl minus the
-    * empty-path case).
-    */
-  private val oracleE2eUrl: String =
-    "(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END || '://' || " +
-      "CASE doc_id % 4 WHEN 0 THEN 'Example.COM' WHEN 1 THEN 'WWW.News-Site.ORG' " +
-      "WHEN 2 THEN 'Docs.Example.COM' ELSE 'example.com' END || " +
-      "CASE WHEN doc_id % 3 = 0 THEN (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END) ELSE '' END || " +
-      "'/Articles/' || doc_id || " +
-      "CASE doc_id % 5 WHEN 0 THEN '?utm_source=feed&b=2&a=1' WHEN 1 THEN '?z=9&a=1&utm_campaign=x' " +
-      "WHEN 2 THEN '?gclid=abc' WHEN 3 THEN '' ELSE '?b=2&a=1' END || " +
-      "CASE WHEN doc_id % 2 = 1 THEN '#section-2' ELSE '' END)"
-
   /** Crawl-shaped WARC fixture for the e2e flagship, serialized once per
     * sf dir: each document wrapped in the [[syntheticHtml]] page (title,
     * nav, h1, body paragraph, footer — the q_text_html_extract fixture)
-    * and written as a `response`-type WARC record at its [[e2eUrl]], in
+    * and written as a `response`-type WARC record at its [[e2ePath]] URL, in
     * 4 files so the read-back is the parallel multi-file scan.
     * Deterministic and SQL-expressible end to end, so the e2e oracle
     * rebuilds the identical record strings and replays the ENTIRE
@@ -633,7 +609,7 @@ object SparkEntry {
       t(s, dir, "documents").select(
           sources.GraftSource.warcRecord(
             lit("response"),
-            e2eUrl,
+            syntheticUrl(e2ePath),
             lit("2024-05-01T00:00:00Z"),
             lit("text/html"),
             syntheticHtml).as("value"))
@@ -2094,34 +2070,33 @@ object SparkEntry {
       // window re-ran ~10× per evaluation and the gate battery ~5×
       // (measured r14, cold-isolated BenchOne at sf0.1: 24.0 s → 13.5 s
       // with the three persists).
-      // The three stage frames are local checkpoints: intra-query scratch
-      // that never enters the CacheManager, whose blocks Spark's
+      // The three stage frames are scratch checkpoints (ops.Scratch):
+      // intra-query frames that never enter the CacheManager, which Spark's
       // ContextCleaner frees once the returned frame that reads them is
       // gone — and at warehouse scale avoiding ~10 re-parses of the crawl
       // for three disk-backed text frames is the same trade the
-      // measure-then-choose reassembly family makes. That trade is
-      // Dedup.Materialize.Local's: the blocks live in executor storage
-      // only, so on a real cluster an executor loss after a checkpoint
-      // kills the job; and they are corpus-scale TEXT that stays on local
-      // disk until a driver GC collects the returned frame
+      // measure-then-choose reassembly family makes. Without a checkpoint
+      // directory they are local checkpoints in executor storage, so an
+      // executor loss after one kills the job; with one (set
+      // spark.checkpoint.dir on a cluster) they are reliable and survive
+      // it. Either way they are corpus-scale TEXT that stays on disk until
+      // a driver GC collects the returned frame
       // (spark.cleaner.periodicGC.interval, 30 min by default), not after
       // the first action — a long-lived session that builds this row
       // again and again holds every generation's copy until then.
-      val base = ext.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn", "url_canon")
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val base = ops.Scratch.checkpoint(ext.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn", "url_canon"), eager = false)
       val bench = base.filter(col("doc_id") % 50 === 0).select(col("doc_id"), col("text"))
       val gated = base.filter(TextOps.gopherPass(col("text"), sep = " the ",
         minWords = 20, minStopHits = 1))
-      val curated = ops.Curate.curate(gated, "text", "doc_id")
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val curated = ops.Scratch.checkpoint(ops.Curate.curate(gated, "text", "doc_id"),
+        eager = false)
       val nearDeduped = Dedup.nearDupKeepFirst(curated, "text", "doc_id",
         numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.8)
       val exact = TextOps.decontaminate(nearDeduped, bench, "text", "doc_id",
         n = 5, minOverlap = 1)
-      val cleaned = Dedup.fuzzyDecontaminate(exact, bench, "text", "doc_id",
-          numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5)
-        .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cleaned = ops.Scratch.checkpoint(Dedup.fuzzyDecontaminate(exact, bench, "text",
+        "doc_id", numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5), eager = false)
       val split = Dedup.leakageSafeSplit(cleaned, "text", "doc_id",
         Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05), salt = "r9e",
         numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5)
@@ -2920,18 +2895,20 @@ object SparkEntry {
   private def oracleMd5Long(e: String): String =
     s"CAST('0x' || substr(md5($e), 1, 15) AS BIGINT)"
 
-  /** The messyUrl synthesis as one SQL expression (mirrors the driver's
-    * Column builder case for case).
+  /** [[syntheticUrl]] as one SQL expression (mirrors the driver's Column
+    * builder case for case), with the path's SQL spliced in.
     */
-  private val oracleMessyUrl: String =
+  private def oracleUrl(path: String): String =
     "(CASE WHEN doc_id % 2 = 0 THEN 'HTTPS' ELSE 'http' END || '://' || " +
       "CASE doc_id % 4 WHEN 0 THEN 'Example.COM' WHEN 1 THEN 'WWW.News-Site.ORG' " +
       "WHEN 2 THEN 'Docs.Example.COM' ELSE 'example.com' END || " +
       "CASE WHEN doc_id % 3 = 0 THEN (CASE WHEN doc_id % 2 = 0 THEN ':443' ELSE ':80' END) ELSE '' END || " +
-      "CASE WHEN doc_id % 5 = 0 THEN '' ELSE '/Articles/' || doc_id END || " +
+      path + " || " +
       "CASE doc_id % 5 WHEN 0 THEN '?utm_source=feed&b=2&a=1' WHEN 1 THEN '?z=9&a=1&utm_campaign=x' " +
       "WHEN 2 THEN '?gclid=abc' WHEN 3 THEN '' ELSE '?b=2&a=1' END || " +
       "CASE WHEN doc_id % 2 = 1 THEN '#section-2' ELSE '' END)"
+  private val oracleE2ePath = "'/Articles/' || doc_id"
+  private val oracleMessyPath = s"CASE WHEN doc_id % 5 = 0 THEN '' ELSE $oracleE2ePath END"
 
   /** Shared train→score CTE chain for the classifier-evaluator oracles
     * (mirrors q_text_trained_score): defines CTEs up to
@@ -3496,7 +3473,7 @@ object SparkEntry {
        |    || 'Content-Length: ' || octet_length(encode(html)) || chr(13)||chr(10)
        |    || chr(13)||chr(10) || html || chr(13)||chr(10) AS r
        |  FROM (
-       |    SELECT doc_id, $oracleE2eUrl AS u,
+       |    SELECT doc_id, ${oracleUrl(oracleE2ePath)} AS u,
        |      '<!DOCTYPE html><html><head><title>Doc ' || doc_id ||
        |      '</title><style>body{color:#000}</style>' ||
        |      '<script type="text/javascript">var x = 1 < 2;</script></head>' ||
@@ -6202,7 +6179,7 @@ object SparkEntry {
     // empty path, tracking-param drop + param sort) replayed in SQL
     "q_text_url_canon" ->
       s"""WITH raw AS (
-         |  SELECT doc_id, $oracleMessyUrl AS url FROM documents
+         |  SELECT doc_id, ${oracleUrl(oracleMessyPath)} AS url FROM documents
          |), st AS (
          |  SELECT doc_id, url, regexp_replace(url, '#.*$$', '') AS u FROM raw
          |), parts AS (
@@ -6232,7 +6209,7 @@ object SparkEntry {
     "q_text_domain_stats" ->
       s"""SELECT
          |  nullif(regexp_replace(
-         |    lower(regexp_extract($oracleMessyUrl, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]*)', 1)),
+         |    lower(regexp_extract(${oracleUrl(oracleMessyPath)}, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#:]*)', 1)),
          |    '^www\\.', ''), '') AS domain,
          |  count(*) AS n_docs,
          |  CAST(sum($oracleWsTokens) AS BIGINT) AS n_tokens,

@@ -14,8 +14,8 @@ import org.apache.spark.sql.functions._
   * runs over that small frame: adjacent-symbol pair counts weighted by
   * word frequency (map-side-combinable aggregate), an argmax collected to
   * the driver (one row), and a native single-pass [[graft.functions.MergePair]]
-  * rewrite of the symbol arrays. Per-round lineage is truncated
-  * ([[Dedup.Materialize]]-style localCheckpoint) exactly like the
+  * rewrite of the symbol arrays. Per-round lineage is truncated by a
+  * scratch checkpoint ([[Scratch.checkpoint]]) exactly like the
   * connected-components loop, so `numMerges` rounds never stack plans.
   *
   * Ties in pair frequency break lexicographically (smallest pair wins) —
@@ -166,13 +166,12 @@ object Bpe {
     require(numMerges >= 1, "numMerges must be >= 1")
     require(maxVocabWords >= 1, "maxVocabWords must be >= 1")
     graft.functions.GraftFunctions.register(docs.sparkSession)
-    var vocab = wordCounts(docs, textCol)
+    var vocab = Scratch.checkpoint(wordCounts(docs, textCol)
       .orderBy(col("freq").desc, col("word"))
       .limit(maxVocabWords)
       .select(col("freq"),
         // each word starts as its character sequence
-        split(col("word"), "").as("symbols"))
-      .localCheckpoint(true)
+        split(col("word"), "").as("symbols")), eager = true)
     val merges = scala.collection.mutable.ListBuffer.empty[Merge]
     var r = 0
     var exhausted = false
@@ -193,14 +192,13 @@ object Bpe {
         val a = top.head.getString(0)
         val b = top.head.getString(1)
         merges += Merge(r, a, b)
-        // per-round lineage truncation; the dropped rounds' checkpoint
-        // blocks are released when the old Dataset is GC'd (Dataset
-        // .unpersist does NOT free localCheckpoint RDD blocks — same
-        // lifecycle as the connectedComponents loop), which is fine at
-        // the vocab-table sizes this trains on
-        vocab = vocab.withColumn("symbols",
-          graft.functions.GraftFunctions.mergePair(col("symbols"), lit(a), lit(b)))
-          .localCheckpoint(true)
+        // per-round lineage truncation; the dropped rounds' checkpoints
+        // are released when the old Dataset is GC'd (Dataset.unpersist
+        // does NOT free checkpoint RDD blocks — same lifecycle as the
+        // connectedComponents loop), which is fine at the vocab-table
+        // sizes this trains on
+        vocab = Scratch.checkpoint(vocab.withColumn("symbols",
+          graft.functions.GraftFunctions.mergePair(col("symbols"), lit(a), lit(b))), eager = true)
         r += 1
       }
     }

@@ -21,36 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** How a near-dup operator materializes its (small) pair result before
-    * releasing the persisted candidate-generation intermediates — the
-    * fault-tolerance / lifecycle dial for cluster callers.
-    */
-  sealed trait Materialize
-  object Materialize {
-    /** `localCheckpoint`: eager, blocks live in executor storage only and
-      * lineage is truncated — the right call for single-JVM and
-      * interactive sessions (cache hygiene, no recomputation), but an
-      * executor loss after the checkpoint kills the job on a real
-      * cluster. Default.
-      */
-    case object Local extends Materialize
-
-    /** Reliable checkpoint into the SparkContext's checkpoint directory
-      * (caller must `sc.setCheckpointDir` to durable storage first):
-      * eager, survives executor loss — the 100 TB cluster choice.
-      */
-    case object Reliable extends Materialize
-
-    /** No materialization and no internal persist: returns the pure lazy
-      * plan for the caller to cache/checkpoint/write as they see fit.
-      * Each action recomputes candidate generation (the shingle and
-      * banding branches run multiple times within one action's plan), so
-      * only choose this to compose the operator into a larger plan the
-      * caller materializes once.
-      */
-    case object Lazy extends Materialize
-  }
-
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Degenerate-bucket guard for the LSH self-joins: buckets whose row
@@ -81,8 +51,7 @@ object Dedup {
       // case) the anti-join never enters the plan, so the guard's only
       // steady-state cost is this one cached-scan aggregation. Total and
       // over-full rows fold into the SAME pass so the all-overfull check
-      // below never re-derives the banding pipeline (a second banded
-      // action would recompute upstream under Materialize.Lazy).
+      // below never re-derives the banding pipeline.
       val m = bucketSizes.agg(
         count(when(col("__n") > cap, lit(1))).as("overBuckets"),
         coalesce(sum(when(col("__n") > cap, col("__n"))), lit(0L)).as("overRows"),
@@ -450,12 +419,11 @@ object Dedup {
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b.
     *
-    * Note: with the default `materialize = Materialize.Local` this
-    * executes EAGERLY — the pair set is materialized before returning so
-    * the persisted shingle/band intermediates can be released
-    * immediately; downstream transforms on the (small) result do not push
-    * into the dedup computation. See [[Materialize]] for the cluster
-    * (`Reliable`) and caller-managed (`Lazy`) alternatives.
+    * Note: this executes EAGERLY — the pair set is checkpointed as
+    * scratch ([[Scratch.checkpoint]]) before returning so the persisted
+    * shingle/band intermediates can be released immediately; downstream
+    * transforms on the (small) result do not push into the dedup
+    * computation.
     */
   def minHashNearDups(
       df: DataFrame,
@@ -465,22 +433,20 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 5,
       threshold: Double = 0.7,
-      materialize: Materialize = Materialize.Local,
       maxBucketSize: Int = 10000,
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     graft.functions.GraftFunctions.register(df.sparkSession)
     val rows = numHashes / bands
-    val eager = materialize != Materialize.Lazy
-    // Persisted (unless Lazy): shingling is the dominant per-pass cost and
+    // Persisted: shingling is the dominant per-pass cost and
     // three plan branches consume it (banding + both verification joins).
     // The native word_shingles expression tokenizes and joins k-grams in
     // one pass.
-    val shingled0 = df
+    val shingled = df
       .select(col(idCol).as("id"),
         graft.functions.GraftFunctions.wordShingles(col(textCol), shingleSize).as("shingles"))
       .filter(size(col("shingles")) > 0)
-    val shingled = if (eager) shingled0.persist() else shingled0
+      .persist()
     val withSig = shingled.withColumn("sig", signatureOfShingles(col("shingles"), numHashes))
 
     // Band rows carry only (band, bucket, id): the LSH shuffle and the
@@ -490,18 +456,18 @@ object Dedup {
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"), xxhash64(lit(b), slice(col("sig"), b * rows + 1, rows)).as("bucket"))
     }
-    // Persisted (unless Lazy): both sides of the self-join read it, and it
+    // Persisted: both sides of the self-join read it, and it
     // is tiny (bands × one long-keyed row per doc) — without this the full
     // signature computation runs twice.
-    val banded0 = withSig
+    val banded1 = withSig
       .select(col("id"), explode(array(bandStructs: _*)).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
-    val banded1 = if (eager) banded0.persist() else banded0
+      .persist()
     // degenerate-bucket guard (see dropOverfullBuckets): the counts
     // aggregation reads the persisted banded frame, so the guard costs one
     // cached-scan aggregation, not a recompute of the signatures
     val banded = dropOverfullBuckets(banded1, Seq("band", "bucket"), maxBucketSize,
-      "minHashNearDups", logMetric = eager)
+      "minHashNearDups", logMetric = true)
 
     val left = banded.select(col("band"), col("bucket"), col("id").as("id_a"))
     val right = banded.select(col("band"), col("bucket"), col("id").as("id_b"))
@@ -521,7 +487,7 @@ object Dedup {
     // intermediates: persisted shingles/bands must not outlive the operator
     // — a long-lived session running many dedups would otherwise accumulate
     // dead cache blocks until executors spill or evict.
-    materializeAndRelease(result, materialize, Seq(shingled, banded1))
+    materializeAndRelease(result, Seq(shingled, banded1))
   }
 
   /** MinHash signatures as a storable (id, sig) table — the state an
@@ -729,21 +695,17 @@ object Dedup {
       bands: Int = 32,
       shingleSize: Int = 5,
       threshold: Double = 0.5,
-      materialize: Materialize = Materialize.Local,
       maxBucketSize: Int = 10000,
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     graft.functions.GraftFunctions.register(corpus.sparkSession)
     val rows = numHashes / bands
-    val eager = materialize != Materialize.Lazy
-    // shingles are consumed twice per side (banding + verification join):
-    // persist unless the caller manages lifetimes (Lazy)
-    def shingled(df: DataFrame): DataFrame = {
-      val s = df.select(col(idCol).as("id"),
+    // shingles are consumed twice per side (banding + verification join)
+    def shingled(df: DataFrame): DataFrame =
+      df.select(col(idCol).as("id"),
           graft.functions.GraftFunctions.wordShingles(col(textCol), shingleSize).as("shingles"))
         .filter(size(col("shingles")) > 0)
-      if (eager) s.persist() else s
-    }
+        .persist()
     val cs = shingled(corpus)
     val bs = shingled(bench)
     val bandStructs = (0 until bands).map { b =>
@@ -754,14 +716,13 @@ object Dedup {
       .withColumn("sig", signatureOfShingles(col("shingles"), numHashes))
       .select(col("id"), explode(array(bandStructs: _*)).as("bb"))
       .select(col("id"), col("bb.band"), col("bb.bucket"))
-    // persisted (unless Lazy): the guard's eager metric aggregation and
+    // persisted: the guard's eager metric aggregation and
     // the candidate join both read the corpus banding — without this the
     // corpus signatures compute twice (the minHashNearDups discipline);
     // the bench banding is consumed once and needs no cache
-    val cb0 = banded(cs)
-    val cb1 = if (eager) cb0.persist() else cb0
+    val cb1 = banded(cs).persist()
     val cb = dropOverfullBuckets(cb1, Seq("band", "bucket"), maxBucketSize,
-      "fuzzyContamination", logMetric = eager)
+      "fuzzyContamination", logMetric = true)
     val candidates = cb
       .join(banded(bs).withColumnRenamed("id", "bench_id"), Seq("band", "bucket"))
       .select(col("id"), col("bench_id"))
@@ -772,7 +733,7 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id"), col("bench_id"), round(col("jaccard"), 6).as("jaccard"))
-    materializeAndRelease(result, materialize, Seq(cs, bs, cb1))
+    materializeAndRelease(result, Seq(cs, bs, cb1))
   }
 
   /** [[fuzzyContamination]]'s gate: the corpus rows near-duplicate to NO
@@ -789,41 +750,24 @@ object Dedup {
       bands: Int = 32,
       shingleSize: Int = 5,
       threshold: Double = 0.5,
-      materialize: Materialize = Materialize.Local,
       maxBucketSize: Int = 10000,
   ): DataFrame = {
     val dirty = fuzzyContamination(corpus, bench, textCol, idCol,
-        numHashes, bands, shingleSize, threshold, materialize, maxBucketSize)
+        numHashes, bands, shingleSize, threshold, maxBucketSize)
       .select(col("id")).distinct()
     corpus.join(dirty, corpus(idCol) === dirty("id"), "left_anti")
   }
 
-  /** Apply the [[Materialize]] policy to a result, then release the
-    * operator's persisted intermediates (no-op for Lazy, which never
-    * persisted them).
+  /** Checkpoint a result as scratch (eager, [[Scratch.checkpoint]]), then
+    * release the operator's persisted intermediates.
     */
   private def materializeAndRelease(
       result: DataFrame,
-      materialize: Materialize,
       persisted: Seq[DataFrame],
-  ): DataFrame = materialize match {
-    case Materialize.Lazy => result
-    case Materialize.Local =>
-      val out = result.localCheckpoint()
-      persisted.foreach(_.unpersist())
-      out
-    case Materialize.Reliable =>
-      // persist before the reliable checkpoint: Dataset.checkpoint() runs
-      // an eager job AND a write job, which would otherwise recompute the
-      // whole verification pipeline from lineage a second time
-      val cached = result.persist()
-      try {
-        val out = cached.checkpoint()
-        out
-      } finally {
-        cached.unpersist()
-        persisted.foreach(_.unpersist())
-      }
+  ): DataFrame = {
+    val out = Scratch.checkpoint(result, eager = true)
+    persisted.foreach(_.unpersist())
+    out
   }
 
   /** Exact Jaccard similarity of two shingle arrays (as sets). */
@@ -1304,29 +1248,14 @@ object Dedup {
       edges: DataFrame, // (id_a, id_b)
       nodes: DataFrame, // (id)
       maxIterations: Int = 50,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame = {
     // Lineage MUST be truncated every iteration (eagerly): `jumped`
     // references `pulled` twice, so the logical plan otherwise doubles per
     // round and Catalyst analysis goes exponential by ~10 iterations —
     // caching alone does not help, the analyzer still walks the full tree.
-    // That rules out Materialize.Lazy here; the dial chooses WHERE the
-    // truncated blocks live:
-    //  - Local: executor-storage localCheckpoint (single-JVM/interactive;
-    //    blocks are released on GC, an executor loss mid-job is fatal);
-    //  - Reliable: checkpoint() into the durable checkpoint dir (the
-    //    cluster choice — iterations survive executor loss). Persist
-    //    before the reliable checkpoint so its write job does not recompute
-    //    the round's joins from lineage a second time.
-    require(materialize != Materialize.Lazy,
-      "connectedComponents is iterative and must truncate lineage every " +
-        "round; Materialize.Lazy is not supported — use Local or Reliable")
-    def truncate(df: DataFrame): DataFrame = materialize match {
-      case Materialize.Local => df.localCheckpoint()
-      case _ =>
-        val cached = df.persist()
-        try cached.checkpoint() finally cached.unpersist()
-    }
+    // Each round is scratch (Scratch.checkpoint): reliable when the session
+    // has a checkpoint directory, so iterations survive executor loss.
+    def truncate(df: DataFrame): DataFrame = Scratch.checkpoint(df, eager = true)
     val both = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist()
@@ -1364,24 +1293,14 @@ object Dedup {
         // filter(changed).count() — paid a second job per round: trivial
         // at sf0.1 (~0.1-0.3 s job latency over cached blocks) but a
         // serial O(rounds) driver term at 100 TB where the re-scan of the
-        // checkpointed blocks is a full cluster pass per round.
-        // Reliable mode keeps the two-action shape: its persist() means
-        // the checkpoint action may read THROUGH InMemoryRelation, whose
-        // cached subtree does not surface observed metrics to the action's
-        // QueryExecution, so the metric could block forever there.
-        val jumped = materialize match {
-          case Materialize.Local =>
-            val obs = org.apache.spark.sql.Observation()
-            val j = round
-              .observe(obs, count(when(col("comp") =!= col("old"), 1)).as("changed"))
-              .localCheckpoint()
-            changed = obs.get("changed").asInstanceOf[Long]
-            j
-          case _ =>
-            val j = truncate(round)
-            changed = j.filter(col("comp") =!= col("old")).count()
-            j
-        }
+        // checkpointed blocks is a full cluster pass per round. The
+        // metric must not sit under an InMemoryRelation (a cached subtree
+        // does not surface it to the action); Scratch.checkpoint's first
+        // action is always the local checkpoint of this very plan.
+        val obs = org.apache.spark.sql.Observation()
+        val jumped = truncate(round
+          .observe(obs, count(when(col("comp") =!= col("old"), 1)).as("changed")))
+        changed = obs.get("changed").asInstanceOf[Long]
         pulled.unpersist()
         labels = jumped.select(col("id"), col("comp"))
         iter += 1
@@ -1412,7 +1331,6 @@ object Dedup {
       newPairs: DataFrame,    // (id_a, id_b) pairs touching the batch
       newNodes: DataFrame,    // (id) the batch's ids
       maxIterations: Int = 50,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame = {
     val starEdges = priorLabels.filter(col("id") =!= col("comp"))
       .select(col("id").as("id_a"), col("comp").as("id_b"))
@@ -1420,16 +1338,14 @@ object Dedup {
       .union(newNodes.select(col("id"))).distinct()
     connectedComponents(
       starEdges.unionByName(newPairs.select(col("id_a"), col("id_b"))),
-      nodes, maxIterations, materialize)
+      nodes, maxIterations)
   }
 
   /** Every row labeled with its near-duplicate cluster (`dup_group` = the
     * minimum id transitively reachable through MinHash near-dup pairs at
     * the threshold). Composition: banded candidate pairs → exact Jaccard
     * verification → connected components — each stage the scale shape
-    * described on its operator. `materialize` reaches both stages; the
-    * clustering loop rejects `Lazy` (iterative lineage must be truncated
-    * every round — see [[connectedComponents]]).
+    * described on its operator.
     */
   def nearDupGroups(
       df: DataFrame,
@@ -1439,12 +1355,9 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 5,
       threshold: Double = 0.7,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame = {
-    val pairs = minHashNearDups(df, textCol, idCol, numHashes, bands, shingleSize, threshold,
-      materialize)
-    val comps = connectedComponents(pairs, df.select(col(idCol).as("id")),
-      materialize = materialize)
+    val pairs = minHashNearDups(df, textCol, idCol, numHashes, bands, shingleSize, threshold)
+    val comps = connectedComponents(pairs, df.select(col(idCol).as("id")))
     df.join(comps.select(col("id").as(idCol), col("comp").as("dup_group")), Seq(idCol))
   }
 
@@ -1461,9 +1374,8 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 5,
       threshold: Double = 0.7,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame =
-    nearDupGroups(df, textCol, idCol, numHashes, bands, shingleSize, threshold, materialize)
+    nearDupGroups(df, textCol, idCol, numHashes, bands, shingleSize, threshold)
       .filter(col(idCol) === col("dup_group")).drop("dup_group")
 
   /** Near-dup clustered dedup keeping the BEST representative per
@@ -1489,10 +1401,8 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 5,
       threshold: Double = 0.7,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame = {
-    val grouped = nearDupGroups(df, textCol, idCol, numHashes, bands, shingleSize,
-      threshold, materialize)
+    val grouped = nearDupGroups(df, textCol, idCol, numHashes, bands, shingleSize, threshold)
     val w = Window.partitionBy(col("dup_group"))
       .orderBy(score.desc_nulls_last, col(idCol))
     grouped.withColumn("__rn", row_number().over(w))
@@ -1532,11 +1442,9 @@ object Dedup {
       bands: Int = 16,
       shingleSize: Int = 5,
       threshold: Double = 0.7,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame =
     Sample.splitByHash(
-      nearDupGroups(df, textCol, idCol, numHashes, bands, shingleSize, threshold,
-        materialize),
+      nearDupGroups(df, textCol, idCol, numHashes, bands, shingleSize, threshold),
       "dup_group", weights, salt)
 
   /** N-gram Jaccard near-duplicates: exact Jaccard over word n-gram sets,
@@ -1575,7 +1483,6 @@ object Dedup {
       threshold: Double = 0.95,
       planes: Int = 8,
       tables: Int = 8,
-      materialize: Materialize = Materialize.Local,
       maxBucketSize: Int = 10000,
   ): DataFrame = {
     graft.functions.GraftFunctions.register(df.sparkSession)
@@ -1587,12 +1494,12 @@ object Dedup {
     // fell out of codegen and evaluated interpreted. Bit-identical
     // buckets (OpsSpec parity test); max(dims, 1) keeps the empty-corpus
     // case a null-band no-op instead of a construction error.
-    val banded0 = base
+    val banded1 = base
       .select(col("id"), posexplode(graft.functions.GraftFunctions.srpBands(
         col("vec"), planes, tables, math.max(dims, 1))).as(Seq("table", "bucket")))
-    val banded1 = if (materialize != Materialize.Lazy) banded0.persist() else banded0
+      .persist()
     val banded = dropOverfullBuckets(banded1, Seq("table", "bucket"), maxBucketSize,
-      "embeddingNearDups", logMetric = materialize != Materialize.Lazy)
+      "embeddingNearDups", logMetric = true)
     val left = banded.select(col("table"), col("bucket"), col("id").as("id_a"))
     val right = banded.select(col("table"), col("bucket"), col("id").as("id_b"))
     // Candidate instances stay duplicated (a pair colliding in t tables
@@ -1629,9 +1536,8 @@ object Dedup {
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
       .dropDuplicates("id_a", "id_b")
-    // materialize per policy, then release the cached banding (see
-    // minHashNearDups)
-    materializeAndRelease(result, materialize, Seq(banded1))
+    // checkpoint, then release the cached banding (see minHashNearDups)
+    materializeAndRelease(result, Seq(banded1))
   }
 
   /** SemDeDup (Abbas et al., arXiv:2303.09540): semantic deduplication by
@@ -1665,12 +1571,11 @@ object Dedup {
       threshold: Double = 0.95,
       nProbe: Int = 1,
       sampleOneIn: Int = 1,
-      materialize: Materialize = Materialize.Local,
       maxCellSize: Int = 10000,
   ): DataFrame =
     semanticDedupWithIndex(
       Similarity.trainIvf(df, vecCol, idCol, nClusters, sampleOneIn),
-      df, vecCol, idCol, threshold, nProbe, materialize, maxCellSize)
+      df, vecCol, idCol, threshold, nProbe, maxCellSize)
 
   /** [[semanticDedup]] against a pre-trained quantizer — the steady-state
     * half of the train-once lifecycle ([[Similarity.saveIvf]]/`loadIvf`
@@ -1683,18 +1588,17 @@ object Dedup {
       idCol: String,
       threshold: Double = 0.95,
       nProbe: Int = 1,
-      materialize: Materialize = Materialize.Local,
       maxCellSize: Int = 10000,
   ): DataFrame = {
     require(nProbe >= 1, "nProbe must be >= 1")
     graft.functions.GraftFunctions.register(df.sparkSession)
     val base = df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val celled0 = base.select(col("id"),
+    val celled1 = base.select(col("id"),
       explode(Similarity.topCells(index, col("vec"), nProbe)).as("cell"))
-    val celled1 = if (materialize != Materialize.Lazy) celled0.persist() else celled0
+      .persist()
     val celled = dropOverfullBuckets(celled1, Seq("cell"), maxCellSize,
-      "semanticDedup", logMetric = materialize != Materialize.Lazy)
+      "semanticDedup", logMetric = true)
     // pair-keyed dedup AFTER verification, not before: with nProbe
     // overlapping cells a pair appears at most nProbe times, so verifying
     // the duplicates costs <= nProbe dot products while deduplicating
@@ -1722,7 +1626,7 @@ object Dedup {
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
       .dropDuplicates("id_a", "id_b")
-    materializeAndRelease(result, materialize, Seq(celled1))
+    materializeAndRelease(result, Seq(celled1))
   }
 
   /** The celled-vector store for incremental SemDeDup: (id, cell, vec),
@@ -1856,12 +1760,9 @@ object Dedup {
       threshold: Double = 0.95,
       nProbe: Int = 1,
       sampleOneIn: Int = 1,
-      materialize: Materialize = Materialize.Local,
   ): DataFrame = {
-    val pairs = semanticDedup(df, vecCol, idCol, nClusters, threshold, nProbe,
-      sampleOneIn, materialize)
-    val comps = connectedComponents(pairs, df.select(col(idCol).as("id")),
-      materialize = materialize)
+    val pairs = semanticDedup(df, vecCol, idCol, nClusters, threshold, nProbe, sampleOneIn)
+    val comps = connectedComponents(pairs, df.select(col(idCol).as("id")))
     df.join(comps.select(col("id").as(idCol), col("comp").as("dup_group")), Seq(idCol))
       .filter(col(idCol) === col("dup_group")).drop("dup_group")
   }
@@ -1900,14 +1801,14 @@ object Dedup {
     * stream-static callers need.
     *
     * Fault tolerance and retention: with a bound above 0 the measured
-    * changed-set side is a `localCheckpoint` — the [[Materialize.Local]]
-    * trade. Its blocks live in executor storage only and its lineage is
-    * truncated, so on a real cluster an executor loss after the
-    * checkpoint kills the job rather than recomputing the side. The
-    * blocks stay for as long as the returned frame is reachable; Spark's
-    * ContextCleaner frees them only after a driver GC has collected that
-    * frame (`spark.cleaner.periodicGC.interval`, 30 min by default), not
-    * after the first action. A bound `<= 0` checkpoints nothing.
+    * changed-set side is scratch ([[Scratch.checkpoint]]): a reliable
+    * checkpoint when the session has a checkpoint directory, which
+    * survives executor loss, and a `localCheckpoint` otherwise, whose
+    * loss with an executor fails the job. It stays for as long as the
+    * returned frame is reachable; Spark's ContextCleaner frees it only
+    * after a driver GC has collected that frame
+    * (`spark.cleaner.periodicGC.interval`, 30 min by default), not after
+    * the first action. A bound `<= 0` checkpoints nothing.
     */
   def paragraphDedup(
       docs: DataFrame,
@@ -2012,13 +1913,12 @@ object Dedup {
     val side =
       if (broadcastMaxPositions <= 0) changed.hint("merge")
       else {
-        // the local checkpoint stays out of the CacheManager: its blocks
-        // live as long as the returned reassembly reads them, and Spark's
-        // ContextCleaner frees them once that frame is gone, so
+        // the scratch checkpoint stays out of the CacheManager: it lives
+        // as long as the returned reassembly reads it, and Spark's
+        // ContextCleaner frees it once that frame is gone, so
         // pipeline-staged sessions don't accumulate one pinned positions
         // frame per dedup pass
-        val measured = changed.localCheckpoint(false,
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val measured = Scratch.checkpoint(changed, eager = false)
         val m = measured.agg(
           coalesce(sum(size(col("__kept"))), lit(0)).cast("long"),
           count(lit(1))).collect().head

@@ -690,14 +690,14 @@ object TextOps {
     * pair aggregate is map-side combinable.
     *
     * Fault tolerance and retention: with the guard on, the inverted index
-    * is a `localCheckpoint` — the [[Dedup.Materialize.Local]] trade. Its
-    * blocks live in executor storage only and its lineage is truncated,
-    * so on a real cluster an executor loss after the checkpoint kills the
-    * job rather than recomputing the index. The blocks stay for as long
-    * as the returned frame is reachable, so every action on it reads them;
-    * Spark's ContextCleaner frees them only after a driver GC has
-    * collected that frame (`spark.cleaner.periodicGC.interval`, 30 min by
-    * default), not after the first action.
+    * is scratch ([[Scratch.checkpoint]]): a reliable checkpoint when the
+    * session has a checkpoint directory, which survives executor loss,
+    * and a `localCheckpoint` otherwise, whose loss with an executor fails
+    * the job. It stays for as long as the returned frame is reachable, so
+    * every action on it reads it; Spark's ContextCleaner frees it only
+    * after a driver GC has collected that frame
+    * (`spark.cleaner.periodicGC.interval`, 30 min by default), not after
+    * the first action.
     */
   def winnowOverlap(
       docs: DataFrame,
@@ -725,12 +725,11 @@ object TextOps {
       // the guard scans the index twice (emission agg + the join) —
       // checkpoint the byte-small (id, hash) rows so the md5 fingerprint
       // pass over the corpus is paid ONCE (spills to disk if the index
-      // outgrows memory; ~16 B/fingerprint). A local checkpoint is never
-      // registered in the CacheManager: its blocks live exactly as long as
-      // the frame that reads them — the returned join, or nothing on a
-      // refusal — and Spark's ContextCleaner frees them once it is gone
-      val inv = idx.localCheckpoint(false,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // outgrows memory; ~16 B/fingerprint). A scratch checkpoint is never
+      // registered in the CacheManager: it lives exactly as long as the
+      // frame that reads it — the returned join, or nothing on a refusal —
+      // and Spark's ContextCleaner frees it once that frame is gone
+      val inv = Scratch.checkpoint(idx, eager = false)
       // buckets over maxBucketSize never reach the join (dropOverfullBuckets
       // below), so they emit nothing; n·(n−1) summed as LONG (SQL `/` would
       // promote to double), halved exactly in Scala — n·(n−1) is always
@@ -1000,14 +999,14 @@ object TextOps {
     * the session (native `word_shingles`).
     *
     * Fault tolerance and retention: with a bound above 0 the starts side
-    * is a `localCheckpoint` — the [[Dedup.Materialize.Local]] trade. Its
-    * blocks live in executor storage only and its lineage is truncated,
-    * so on a real cluster an executor loss after the checkpoint kills the
-    * job rather than recomputing the side. The blocks stay for as long as
-    * the returned frame is reachable; Spark's ContextCleaner frees them
-    * only after a driver GC has collected that frame
-    * (`spark.cleaner.periodicGC.interval`, 30 min by default), not after
-    * the first action. `broadcastMaxPositions <= 0` checkpoints nothing.
+    * is scratch ([[Scratch.checkpoint]]): a reliable checkpoint when the
+    * session has a checkpoint directory, which survives executor loss,
+    * and a `localCheckpoint` otherwise, whose loss with an executor fails
+    * the job. It stays for as long as the returned frame is reachable;
+    * Spark's ContextCleaner frees it only after a driver GC has collected
+    * that frame (`spark.cleaner.periodicGC.interval`, 30 min by default),
+    * not after the first action. `broadcastMaxPositions <= 0` checkpoints
+    * nothing.
     */
   def dedupSpans(
       docs: DataFrame,
@@ -1101,10 +1100,10 @@ object TextOps {
         // guard discipline, join-side edition): checkpoint the df-gated
         // side — (id, positions) longs only, never text — and pay one
         // aggregate to learn its TRUE size before choosing the strategy.
-        // The local checkpoint stays out of the CacheManager; its blocks
-        // are freed by Spark's ContextCleaner with the returned frame
-        val p = startsOf(if (n <= dupHashBroadcastMax) broadcast(dh) else dh)
-          .localCheckpoint(false, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // The scratch checkpoint stays out of the CacheManager; Spark's
+        // ContextCleaner frees it with the returned frame
+        val p = Scratch.checkpoint(
+          startsOf(if (n <= dupHashBroadcastMax) broadcast(dh) else dh), eager = false)
         val m = p.agg(coalesce(sum(size(col("__starts"))), lit(0)).cast("long"),
           count(lit(1))).collect().head
         val positions = m.getLong(0)

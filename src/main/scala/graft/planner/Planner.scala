@@ -100,7 +100,8 @@ object Planner {
   ): Either[String, DataFrame => DataFrame] =
     for {
       fromFn <- from.fold[Either[String, DataFrame => DataFrame]](Right(identity))(plan)
-      cond <- where.fold[Either[String, Option[Col]]](Right(None))(c => planCondition(c).map(Some(_)))
+      cond <- where.fold[Either[String, Option[Col]]](Right(None))(
+        c => planCondition(c, negated = false).map(Some(_)))
     } yield { (df0: DataFrame) =>
       var df = fromFn(df0)
       cond.foreach(c => df = df.filter(c()))
@@ -252,14 +253,22 @@ object Planner {
 
   // -- conditions ------------------------------------------------------------
 
-  private def planCondition(c: Condition): Either[String, Col] = c match {
-    case Condition.Term(t)    => planTerm(t)
-    case Condition.Or(t1, t2) => for { a <- planTerm(t1); b <- planTerm(t2) } yield () => a() || b()
+  /** Conditions plan with `negated` pushed down to the leaves: under NOT,
+    * OR becomes AND, AND becomes OR, comparisons flip ([[negate]]) and a
+    * bare field `x` becomes `{x: false}`.
+    */
+  private def planCondition(c: Condition, negated: Boolean): Either[String, Col] = c match {
+    case Condition.Term(t)    => planTerm(t, negated)
+    case Condition.Or(t1, t2) =>
+      for { a <- planTerm(t1, negated); b <- planTerm(t2, negated) }
+      yield if (negated) () => a() && b() else () => a() || b()
   }
 
-  private def planTerm(t: Term): Either[String, Col] = t match {
-    case Term.Fact(f)     => planFactor(f)
-    case Term.And(f1, f2) => for { a <- planFactor(f1); b <- planFactor(f2) } yield () => a() && b()
+  private def planTerm(t: Term, negated: Boolean): Either[String, Col] = t match {
+    case Term.Fact(f)     => planFactor(f, negated)
+    case Term.And(f1, f2) =>
+      for { a <- planFactor(f1, negated); b <- planFactor(f2, negated) }
+      yield if (negated) () => a() || b() else () => a() && b()
   }
 
   /** NOT handling mirrors the reference's compile-time push-down including
@@ -268,38 +277,14 @@ object Planner {
     * simplify a plain `!` anyway; we keep the structural rewrite so the
     * quirk and the `{field: false}` bare-field form stay observable.
     */
-  private def planFactor(f: Factor): Either[String, Col] = f match {
-    case Factor.Op(o) =>
-      o match {
-        case Operand.Field(name) => Right(() => col(name) === lit(true))
-        case other               => Right(() => operandColumn(other))
-      }
-    case Factor.Cond(c)  => planCondition(c)
-    case Factor.Not(x)   => planNotFactor(x)
-    case bin: Factor.Bin => planBinary(bin, negated = false)
-  }
-
-  private def planNotCondition(c: Condition): Either[String, Col] = c match {
-    case Condition.Term(t)    => planNotTerm(t)
-    case Condition.Or(t1, t2) => for { a <- planNotTerm(t1); b <- planNotTerm(t2) } yield () => a() && b()
-  }
-
-  private def planNotTerm(t: Term): Either[String, Col] = t match {
-    case Term.Fact(f)     => planNotFactor(f)
-    case Term.And(f1, f2) => for { a <- planNotFactor(f1); b <- planNotFactor(f2) } yield () => a() || b()
-  }
-
-  private def planNotFactor(f: Factor): Either[String, Col] = f match {
-    case Factor.Op(o) =>
-      o match {
-        case Operand.Field(name) => Right(() => col(name) === lit(false))
-        // Non-field operands under NOT are not negated — reference quirk
-        // (reference: src/Ifrit/Driver/MongoDB.purs:401-406).
-        case other => Right(() => operandColumn(other))
-      }
-    case Factor.Cond(c)  => planNotCondition(c)
-    case Factor.Not(x)   => planNotFactor(x) // double-negation quirk, see scaladoc
-    case bin: Factor.Bin => planBinary(bin, negated = true)
+  private def planFactor(f: Factor, negated: Boolean): Either[String, Col] = f match {
+    case Factor.Op(Operand.Field(name)) => Right(() => col(name) === lit(!negated))
+    // Non-field operands are never negated — reference quirk
+    // (reference: src/Ifrit/Driver/MongoDB.purs:401-406).
+    case Factor.Op(other) => Right(() => operandColumn(other))
+    case Factor.Cond(c)   => planCondition(c, negated)
+    case Factor.Not(x)    => planFactor(x, negated = true) // double-negation quirk, see scaladoc
+    case bin: Factor.Bin  => planBinary(bin, negated)
   }
 
   private def negate(op: Binary): Binary = op match {

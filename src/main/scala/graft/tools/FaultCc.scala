@@ -8,22 +8,23 @@ import graft.ops.Dedup
   * near-dup clustering → connected components), run on a real cluster
   * while an external script SIGKILLs executors.
   *
-  * The CC loop truncates lineage every round; the [[Dedup.Materialize]]
-  * dial chooses where the truncated blocks live, and this driver
-  * witnesses the documented trade on real executor deaths:
+  * The CC loop truncates lineage every round with a scratch checkpoint
+  * ([[graft.ops.Scratch]]), whose kind follows the session, and this
+  * driver witnesses the documented trade on real executor deaths:
   *
-  *  - `local`  — `localCheckpoint`: blocks in executor storage only.
-  *    An executor lost AFTER a checkpoint cannot be recomputed (lineage
-  *    is gone); the iteration's job fails. Expected under kill: some
-  *    repetitions FAIL (with Spark's checkpoint-block FetchFailed /
-  *    block-not-found error), and every repetition that completes
-  *    yields the bit-identical checksum.
-  *  - `reliable` — `checkpoint()` into a durable checkpoint dir:
-  *    blocks re-readable by replacement executors. Expected under kill:
-  *    every repetition completes with the identical checksum.
+  *  - `local` — no checkpoint directory, so `localCheckpoint`: blocks in
+  *    executor storage only. An executor lost AFTER a checkpoint cannot
+  *    be recomputed (lineage is gone); the iteration's job fails.
+  *    Expected under kill: some repetitions FAIL (with Spark's
+  *    checkpoint-block FetchFailed / block-not-found error), and every
+  *    repetition that completes yields the bit-identical checksum.
+  *  - `reliable` — a checkpoint directory (`spark.checkpoint.dir`, or the
+  *    optional argument): blocks re-readable by replacement executors.
+  *    Expected under kill: every repetition completes with the identical
+  *    checksum.
   *
   * Usage (spark-submit):
-  *   FaultCc <sfDir> <local|reliable> <reps> [checkpointDir]
+  *   FaultCc <sfDir> <reps> [checkpointDir]
   * Prints one line per repetition:
   *   FAULTCC <mode> rep=<i> OK rows=<n> checksum=<x> iterKills=<k>
   *   FAULTCC <mode> rep=<i> FAILED <exception class>: <first line>
@@ -34,17 +35,12 @@ import graft.ops.Dedup
 object FaultCc {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val mode = args(1)
-    val reps = args(2).toInt
-    val ckptDir = if (args.length > 3) Some(args(3)) else None
-    val mat = mode match {
-      case "local" => Dedup.Materialize.Local
-      case "reliable" => Dedup.Materialize.Reliable
-      case other => sys.error(s"mode must be local|reliable, got $other")
-    }
-    val spark = graft.SparkEntry.session(s"graft-fault-cc-$mode")
+    val reps = args(1).toInt
+    val ckptDir = if (args.length > 2) Some(args(2)) else None
+    val spark = graft.SparkEntry.session("graft-fault-cc")
     spark.sparkContext.setLogLevel("WARN")
     ckptDir.foreach(spark.sparkContext.setCheckpointDir)
+    val mode = if (spark.sparkContext.getCheckpointDir.isDefined) "reliable" else "local"
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     var ok = 0
     var failed = 0
@@ -52,8 +48,7 @@ object FaultCc {
     for (i <- 1 to reps) {
       try {
         val groups = Dedup.nearDupGroups(docs, "text", "doc_id",
-          numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5,
-          materialize = mat)
+          numHashes = 128, bands = 32, shingleSize = 5, threshold = 0.5)
         val row = groups.agg(
           count(lit(1)).as("n"),
           sum(pmod(xxhash64(col("doc_id"), col("dup_group")), lit(1000000007L)))

@@ -374,72 +374,6 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     assert(keptNull == Set(2L, 4L, 5L))
   }
 
-  test("Materialize.Lazy returns the same pairs as the default and caches nothing") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val lazyPairs = Dedup.minHashNearDups(docs, "text", "doc_id",
-        numHashes = 128, bands = 32, threshold = 0.5,
-        materialize = Dedup.Materialize.Lazy)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    val after = spark.sparkContext.getPersistentRDDs.keySet
-    assert((after -- before).isEmpty) // pure lazy plan: no blocks left behind
-    val default = Dedup.minHashNearDups(docs, "text", "doc_id",
-        numHashes = 128, bands = 32, threshold = 0.5)
-      .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(lazyPairs == default)
-  }
-
-  test("Materialize.Lazy construction runs NO Spark job (eager guard opt-out)") {
-    // Interactive / plan-only callers must be able to build the operator
-    // without triggering any action: under Lazy the degenerate-bucket
-    // guard is the window form (a plan node), never the eager metric
-    // aggregation, and nothing persists or collects. A listener counts
-    // job starts; the eager default validates the wiring (it MUST run
-    // jobs — it materializes the pair set at construction).
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // positive control: default (Local) materializes eagerly → jobs run
-      Dedup.minHashNearDups(docs, "text", "doc_id",
-        numHashes = 128, bands = 32, threshold = 0.5)
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() == 0 && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(jobs.get() > 0, "listener wiring: eager construction must run jobs")
-      val afterEager = jobs.get()
-      // the assertion under test: Lazy construction schedules nothing
-      Dedup.minHashNearDups(docs, "text", "doc_id",
-        numHashes = 128, bands = 32, threshold = 0.5,
-        materialize = Dedup.Materialize.Lazy)
-      Dedup.embeddingNearDups(vecs, "embedding", "vec_id",
-        threshold = 0.99, planes = 8,
-        materialize = Dedup.Materialize.Lazy)
-      Thread.sleep(500) // listener bus is async; give a stray job time to surface
-      assert(jobs.get() == afterEager,
-        s"Lazy construction ran ${jobs.get() - afterEager} Spark job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  test("Materialize.Reliable checkpoints the result and matches the default") {
-    val dir = tempDir("graft-ckpt")
-    spark.sparkContext.setCheckpointDir(dir)
-    val reliable = Dedup.minHashNearDups(docs, "text", "doc_id",
-        numHashes = 128, bands = 32, threshold = 0.5,
-        materialize = Dedup.Materialize.Reliable)
-    // eager reliable checkpoint: files landed in the checkpoint dir and
-    // the returned plan is the materialized scan, not the dedup pipeline
-    def countFiles(p: java.io.File): Int =
-      if (p.isDirectory) p.listFiles.map(countFiles).sum else 1
-    assert(countFiles(new java.io.File(dir)) > 0)
-    assert(reliable.queryExecution.optimizedPlan.collectLeaves()
-      .forall(_.getClass.getSimpleName.contains("LogicalRDD")))
-    val pairs = reliable.collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
-    assert(pairs.contains((0L, 1L)) && pairs.contains((0L, 2L)))
-  }
-
   test("incremental dedup: batch anti-joins history digests, then keep-first") {
     val history = Seq((0L, base), (1L, "old unique document text")).toDF("doc_id", "text")
     val batch = Seq(
@@ -680,40 +614,6 @@ class OpsSpec extends AnyFunSuite with TempDirs {
     val guarded = Similarity.lshTopK(clones, probes, "embedding", "vec_id",
       k = 3, planes = 2, tables = 2, maxBucketSize = 10)
     assert(guarded.count() == 0)
-  }
-
-  test("connected components Materialize.Reliable converges with identical labels") {
-    val dir = tempDir("graft-cc-ckpt")
-    spark.sparkContext.setCheckpointDir(dir)
-    // a chain (forces several iterations) + a singleton
-    val edges = (0L until 15L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val nodes = (0L to 16L).map(Tuple1(_)).toDF("id")
-    val local = Dedup.connectedComponents(edges, nodes)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val reliable = Dedup.connectedComponents(edges, nodes,
-        materialize = Dedup.Materialize.Reliable)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(reliable == local)
-    assert(reliable(15L) == 0L && reliable(16L) == 16L)
-    // the reliable path actually wrote durable checkpoint files
-    def countFiles(p: java.io.File): Int =
-      if (p.isDirectory) p.listFiles.map(countFiles).sum else 1
-    assert(countFiles(new java.io.File(dir)) > 0)
-    // and the end-to-end composition accepts the dial
-    val kept = Dedup.nearDupKeepFirst(docs, "text", "doc_id",
-        numHashes = 128, bands = 32, threshold = 0.5,
-        materialize = Dedup.Materialize.Reliable)
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(0L, 4L, 5L))
-  }
-
-  test("connected components rejects Materialize.Lazy") {
-    val edges = Seq((1L, 2L)).toDF("id_a", "id_b")
-    val nodes = Seq(1L, 2L).map(Tuple1(_)).toDF("id")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(edges, nodes, materialize = Dedup.Materialize.Lazy)
-    }
-    assert(e.getMessage.contains("Lazy"))
   }
 
   test("ngram jaccard near-dups at tight threshold keep only true dups") {

@@ -24,6 +24,30 @@ class PlanSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
+  /** The executed plan of the checkpoint action `build` runs: an operator
+    * that checkpoints its result at construction returns a scan of that
+    * checkpoint, so its pipeline's plan is the one that action executed.
+    */
+  private def constructionPlan(build: => DataFrame): String = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      build
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one checkpoint action, saw ${plans.size}")
+    plans.peek()
+  }
+
   test("dialect filter + projection reach the parquet scan (pushdown + pruning)") {
     val p = plan(Compiler.queryOrThrow(li, "SELECT l_orderkey WHERE l_quantity < 3"))
     assert(p.contains("PushedFilters: [IsNotNull(l_quantity), LessThan(l_quantity,3.0)]"), p)
@@ -189,19 +213,15 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("minhash near-dup candidate generation never plans a cartesian product") {
-    // Lazy keeps the full plan visible (the default materializes eagerly
-    // and returns a scan of the checkpointed result)
-    val p = plan(Dedup.minHashNearDups(docs, "text", "doc_id",
-      numHashes = 32, bands = 8, threshold = 0.5,
-      materialize = Dedup.Materialize.Lazy))
+    val p = constructionPlan(Dedup.minHashNearDups(docs, "text", "doc_id",
+      numHashes = 32, bands = 8, threshold = 0.5))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
 
   test("fuzzy decontamination plans equi-joins only: no cartesian, no nested loop") {
-    val p = plan(Dedup.fuzzyContamination(docs, docs.limit(10), "text", "doc_id",
-      numHashes = 32, bands = 8, threshold = 0.5,
-      materialize = Dedup.Materialize.Lazy))
+    val p = constructionPlan(Dedup.fuzzyContamination(docs, docs.limit(10), "text", "doc_id",
+      numHashes = 32, bands = 8, threshold = 0.5))
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("BroadcastNestedLoopJoin"), p)
   }
@@ -326,11 +346,8 @@ class PlanSpec extends AnyFunSuite {
   test("semantic dedup: cells shuffle ids only, vectors re-join candidate-sized") {
     graft.functions.GraftFunctions.register(spark)
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    // Lazy materialization: Local checkpoints the result, which would
-    // collapse the executed plan to a bare RDD scan
-    val p = plan(graft.ops.Dedup.semanticDedup(emb, "embedding", "vec_id",
-      nClusters = 4, threshold = 0.45, nProbe = 2,
-      materialize = graft.ops.Dedup.Materialize.Lazy))
+    val p = constructionPlan(graft.ops.Dedup.semanticDedup(emb, "embedding", "vec_id",
+      nClusters = 4, threshold = 0.45, nProbe = 2))
     // the within-cell self-join is an equi-join on the cell id — never a
     // corpus-wide cross — and no exchange ever carries the vectors: every
     // hashpartitioning key set is over ids/cells
@@ -357,9 +374,8 @@ class PlanSpec extends AnyFunSuite {
       keyBlocks = 2, slices = 3))
     val pSimWide = plan(Dedup.simHashNearDupsWide(docs, "text", "doc_id", maxHamming = 8,
       keyBlocks = 2))
-    val pSrp = plan(Dedup.embeddingNearDups(emb, "embedding", "vec_id",
-      threshold = 0.45, planes = 5, tables = 4,
-      materialize = graft.ops.Dedup.Materialize.Lazy))
+    val pSrp = constructionPlan(Dedup.embeddingNearDups(emb, "embedding", "vec_id",
+      threshold = 0.45, planes = 5, tables = 4))
     for (p <- Seq(pSim, pSimSliced, pSimWide, pSrp)) {
       assert(p.contains("SortMergeJoin"), p) // the banded self-join
       assert(!p.contains("CartesianProduct"), p)

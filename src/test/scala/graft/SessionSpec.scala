@@ -16,6 +16,8 @@ class SessionSpec extends AnyFunSuite {
     assert(c("spark.sql.adaptive.coalescePartitions.enabled") == "true")
     assert(c("spark.sql.shuffle.partitions") == "7")
     assert(c("spark.sql.session.timeZone") == "UTC")
+    // reliable scratch checkpoint files leave with their frame (ops.Scratch)
+    assert(c("spark.cleaner.referenceTracking.cleanCheckpoints") == "true")
     // codegen (SparkEntry.pinnedCodegenConfs); the cache size is static,
     // fixed by the JVM's first session
     assert(c("spark.sql.codegen.cache.maxEntries") == "4000")

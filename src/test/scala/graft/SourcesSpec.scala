@@ -184,29 +184,11 @@ class SourcesSpec extends AnyFunSuite with TempDirs {
     // each child's Hive session leaves a `<uuid>_resources` directory in
     // its temp dir: keep those inside a directory this test deletes
     val childTmp = tempDir("graft-jvm-tmp-")
-    val java17 = System.getProperty("java.home") + "/bin/java"
-    val cp = System.getProperty("java.class.path")
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
     def phase(args: String*): String = {
-      val cmd = Seq(java17) ++ addOpens ++
-        Seq("-Xmx2g", "-Dspark.ui.enabled=false", s"-Djava.io.tmpdir=$childTmp", "-cp", cp,
-          "graft.tools.BucketedCatalog") ++ args
-      val out = new StringBuilder
-      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      val rd = new java.io.BufferedReader(
-        new java.io.InputStreamReader(proc.getInputStream))
-      Iterator.continually(rd.readLine()).takeWhile(_ != null)
-        .foreach(l => out.append(l).append('\n'))
-      assert(proc.waitFor() == 0, s"${args.head} phase failed:\n${out.takeRight(4000)}")
-      out.toString
+      val (code, out) = ChildJvm.run("graft.tools.BucketedCatalog", args,
+        Seq("-Xmx2g", "-Dspark.ui.enabled=false", s"-Djava.io.tmpdir=$childTmp"))
+      assert(code == 0, s"${args.head} phase failed:\n${out.takeRight(4000)}")
+      out
     }
     val wOut = phase("write", wh, dir)
     val rows = wOut.linesIterator.find(_.startsWith("WRITE_OK"))

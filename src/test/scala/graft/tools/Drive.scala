@@ -124,16 +124,17 @@ object Drive {
     println(graft.Compiler.query(li, "SELECT l_returnflag + 1 AS q", extensions = true))
     println(graft.Compiler.query(li, "SELECT l_quantity + 1", extensions = true))
 
-    println("== round-4: clustering with the Materialize dial ==")
+    println("== round-4: clustering without, then with, a checkpoint directory ==")
+    // a session's checkpoint directory cannot be unset, so the run without
+    // one goes first; every later scratch frame in this drive is reliable
+    val keptLocal = graft.ops.Dedup.nearDupKeepFirst(docs, "text", "doc_id",
+      numHashes = 128, bands = 32, threshold = 0.5).count()
     spark.sparkContext.setCheckpointDir(
       java.nio.file.Files.createTempDirectory("drive-ckpt").toString)
-    val keptLocal = graft.ops.Dedup.nearDupKeepFirst(docs, "text", "doc_id",
-      numHashes = 128, bands = 32, threshold = 0.5)
     val keptReliable = graft.ops.Dedup.nearDupKeepFirst(docs, "text", "doc_id",
-      numHashes = 128, bands = 32, threshold = 0.5,
-      materialize = graft.ops.Dedup.Materialize.Reliable)
-    println(s"near-dedup keep-first: Local kept ${keptLocal.count()}, " +
-      s"Reliable kept ${keptReliable.count()} (must match)")
+      numHashes = 128, bands = 32, threshold = 0.5).count()
+    println(s"near-dedup keep-first: local checkpoints kept $keptLocal, " +
+      s"reliable checkpoints kept $keptReliable (must match)")
 
     println("== round-4: decontamination + incremental dedup ==")
     val bench4 = docs.filter(col("doc_id") % 50 === 0)

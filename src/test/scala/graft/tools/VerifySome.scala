@@ -26,17 +26,8 @@ object VerifySome {
       fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       println(s"[verify-some] wrote $name")
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = graft.SparkEntry.oracleSql.filter(o => names(o._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${graft.util.Json.quote(k)}: ${graft.util.Json.quote(v)}" }.mkString("{", ",", "}")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

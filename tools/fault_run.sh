@@ -57,12 +57,12 @@ wait $KPID 2>/dev/null
 python3 tools/oracle_check.py "$OUT/ft_verify" "$SF" $SUBSET --json="$OUT/phaseA_oracle.json" \
   | tee -a "$OUT/phaseA.log"
 # expected: every query that completed passes; q_pipeline_e2e may die on the
-# documented localCheckpoint loss (see phase B for the recovery dial)
+# documented localCheckpoint loss (see phase B: a checkpoint directory recovers)
 
 echo "== phase B1: FaultCc local (localCheckpoint) under kills =="
 killer 15 3 12 "$OUT/kills_local.log" &
 KPID=$!
-submit --conf spark.executor.memory=6g -- graft.tools.FaultCc "$SF" local 8 \
+submit --conf spark.executor.memory=6g -- graft.tools.FaultCc "$SF" 8 \
   2>"$OUT/phaseB_local.err" | grep FAULTCC | tee "$OUT/faultcc_local.log"
 wait $KPID 2>/dev/null
 
@@ -70,7 +70,7 @@ echo "== phase B2: FaultCc reliable (durable checkpoint) under kills =="
 rm -rf "$OUT/ckpt"; mkdir -p "$OUT/ckpt"
 killer 15 4 12 "$OUT/kills_rel.log" &
 KPID=$!
-submit --conf spark.executor.memory=6g -- graft.tools.FaultCc "$SF" reliable 8 "$OUT/ckpt" \
+submit --conf spark.executor.memory=6g -- graft.tools.FaultCc "$SF" 8 "$OUT/ckpt" \
   2>"$OUT/phaseB_rel.err" | grep FAULTCC | tee "$OUT/faultcc_rel.log"
 wait $KPID 2>/dev/null
 
