@@ -7,11 +7,12 @@ import graft.util.Json
   * written, the run exits 1 naming each query that threw. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // args: <sfDir> <outDir> [queryName ...] — the optional tail
-    // restricts the run to named queries (local iteration; the driver
-    // always passes exactly two args and gets the full surface)
+    // args: <sfDir> <outDir> [queryName ...] — the optional tail (names
+    // space- or comma-separated) restricts the results and oracle_sql.json
+    // to the named queries (local iteration; the driver always passes
+    // exactly two args and gets the full surface)
     val sfDir = args(0); val outDir = args(1)
-    val only = args.drop(2).toSet
+    val only = args.drop(2).flatMap(_.split(',')).filter(_.nonEmpty).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"no such queries: ${unknown.toSeq.sorted.mkString(", ")}")
     // pinned posture shared with Bench and cluster runs (CLUSTER.md)
@@ -33,6 +34,7 @@ object Verify {
     // config at the correctness SFs are omitted off-rung (→ rows-only)
     // rather than dumped as guaranteed false mismatches
     val json = SparkEntry.oracleSqlFor(spark, sfDir)
+      .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -18,8 +18,11 @@ import org.apache.spark.sql.types._
   * Semantics are bit-identical to the HOF fold the DuckDB oracles mirror:
   * sequential left-to-right double accumulation starting at 0.0, null if
   * the array is null or any element is null, 0.0 for an empty array.
+  * With `squares`, each element is squared in double first: Σ x·x, the
+  * fold of `transform(arr, x -> x * x)` that STDDEV's two-sums identity
+  * reads, without the interpreted lambda.
   */
-case class ArraySum(child: Expression) extends UnaryExpression {
+case class ArraySum(child: Expression, squares: Boolean = false) extends UnaryExpression {
 
   override def dataType: DataType = DoubleType
 
@@ -32,9 +35,7 @@ case class ArraySum(child: Expression) extends UnaryExpression {
       s"array_sum requires an array of a numeric type, got ${other.simpleString}")
   }
 
-  // per-element read as double — every numeric type the schema layer
-  // admits as Number (the dialect sees one Number type, so the physical
-  // element type must never surface as an analysis error)
+  // per-element read as double, as generated Java (NumericArrays.elemAsDouble)
   private def elemAsDoubleJava(a: String, i: String): String =
     child.dataType match {
       case ArrayType(ByteType, _)    => s"(double) $a.getByte($i)"
@@ -54,16 +55,8 @@ case class ArraySum(child: Expression) extends UnaryExpression {
     var i = 0
     while (i < n) {
       if (xs.isNullAt(i)) return null
-      s += (child.dataType match {
-        case ArrayType(ByteType, _)    => xs.getByte(i).toDouble
-        case ArrayType(ShortType, _)   => xs.getShort(i).toDouble
-        case ArrayType(IntegerType, _) => xs.getInt(i).toDouble
-        case ArrayType(LongType, _)    => xs.getLong(i).toDouble
-        case ArrayType(FloatType, _)   => xs.getFloat(i).toDouble
-        case ArrayType(d: DecimalType, _) =>
-          xs.getDecimal(i, d.precision, d.scale).toDouble
-        case _                         => xs.getDouble(i)
-      })
+      val x = NumericArrays.elemAsDouble(child.dataType, xs, i)
+      s += (if (squares) x * x else x)
       i += 1
     }
     s
@@ -74,12 +67,14 @@ case class ArraySum(child: Expression) extends UnaryExpression {
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      val x = ctx.freshName("x")
       s"""
          |int $n = $a.numElements();
          |double $s = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  if ($a.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  $s += ${elemAsDoubleJava(a, i)};
+         |  double $x = ${elemAsDoubleJava(a, i)};
+         |  $s += ${if (squares) s"$x * $x" else x};
          |}
          |if (!${ev.isNull}) ${ev.value} = $s;
        """.stripMargin
@@ -88,7 +83,109 @@ case class ArraySum(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(newChild: Expression): ArraySum =
     copy(child = newChild)
 
-  override def prettyName: String = "array_sum"
+  override def prettyName: String = if (squares) "array_sum_squares" else "array_sum"
+}
+
+/** Native interpolated median of a numeric array, in double
+  * (`quantile_cont(0.5)` semantics, DuckDB-mirrorable): the middle element
+  * of the sorted array, or the mean of the middle two.
+  *
+  * Why custom: the Column form sorted with `array_sort`, a higher-order
+  * function (one interpreted comparator call per comparison, per row); see
+  * [[ArraySum]]. This is one primitive sort inside whole-stage codegen.
+  *
+  * Semantics are bit-identical to that form: elements sort as
+  * `array_sort` orders them (ascending, NaN last, -0.0 and 0.0 equal and
+  * kept in input order, nulls last) and null elements count in n, so a
+  * middle slot that holds a null yields null. Null for a null or empty
+  * array.
+  */
+case class ArrayMedian(child: Expression) extends UnaryExpression {
+
+  override def dataType: DataType = DoubleType
+
+  override def nullable: Boolean = true
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(_: NumericType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"array_median requires an array of a numeric type, got ${other.simpleString}")
+  }
+
+  override protected def nullSafeEval(input: Any): Any =
+    NumericArrays.median(input.asInstanceOf[ArrayData], child.dataType)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      val r = ctx.freshName("r")
+      val arrayType = ctx.addReferenceObj("arrayType", child.dataType)
+      s"""
+         |Double $r = graft.functions.NumericArrays.median($a, $arrayType);
+         |if ($r == null) ${ev.isNull} = true; else ${ev.value} = $r;
+       """.stripMargin
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): ArrayMedian =
+    copy(child = newChild)
+
+  override def prettyName: String = "array_median"
+}
+
+/** The element read [[ArraySum]] and [[ArrayMedian]] share, and the
+  * median kernel.
+  */
+object NumericArrays {
+
+  /** Element `i` read as double — every numeric type the schema layer
+    * admits as Number (the dialect sees one Number type, so the physical
+    * element type must never surface as an analysis error).
+    */
+  def elemAsDouble(arrayType: DataType, xs: ArrayData, i: Int): Double =
+    arrayType match {
+      case ArrayType(ByteType, _)    => xs.getByte(i).toDouble
+      case ArrayType(ShortType, _)   => xs.getShort(i).toDouble
+      case ArrayType(IntegerType, _) => xs.getInt(i).toDouble
+      case ArrayType(LongType, _)    => xs.getLong(i).toDouble
+      case ArrayType(FloatType, _)   => xs.getFloat(i).toDouble
+      case ArrayType(d: DecimalType, _) =>
+        xs.getDecimal(i, d.precision, d.scale).toDouble
+      case _                         => xs.getDouble(i)
+    }
+
+  /** The interpolated median of `xs` (see [[ArrayMedian]]). */
+  def median(xs: ArrayData, arrayType: DataType): java.lang.Double = {
+    val n = xs.numElements()
+    val v = new Array[Double](n)
+    var m = 0
+    var i = 0
+    while (i < n) {
+      if (!xs.isNullAt(i)) { v(m) = elemAsDouble(arrayType, xs, i); m += 1 }
+      i += 1
+    }
+    // nulls sort after the m values and count in n
+    if (n == 0 || (n + 2) / 2 > m) return null
+    // Arrays.sort orders -0.0 before 0.0; array_sort compares them equal
+    // and its stable sort keeps them in input order, so put the zeros back
+    // in the order they came in
+    var zeros: Array[Double] = null
+    var nz = 0
+    i = 0
+    while (i < m) {
+      if (v(i) == 0.0) {
+        if (zeros == null) zeros = new Array[Double](m)
+        zeros(nz) = v(i)
+        nz += 1
+      }
+      i += 1
+    }
+    java.util.Arrays.sort(v, 0, m)
+    if (nz > 1) {
+      var z = 0
+      while (v(z) != 0.0) z += 1
+      System.arraycopy(zeros, 0, v, z, nz)
+    }
+    if (n % 2 == 1) v((n + 1) / 2 - 1) else (v(n / 2 - 1) + v(n / 2)) / 2.0
+  }
 }
 
 /** Native L2 normalization of a numeric array: `x / sqrt(Σ x²)`, both

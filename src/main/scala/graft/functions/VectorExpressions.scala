@@ -1242,6 +1242,8 @@ object GraftFunctions {
       add("simhash60", exprs => SimHash60(exprs(0)))
       add("simhash120", exprs => SimHash120(exprs(0)))
       add("array_sum", exprs => ArraySum(exprs(0)))
+      add("array_sum_squares", exprs => ArraySum(exprs(0), squares = true))
+      add("array_median", exprs => ArrayMedian(exprs(0)))
       add("vec_l2normalize", exprs => VecL2Normalize(exprs(0)))
       add("topk_by_score", exprs =>
         TopKByScore(exprs(0), exprs(1), exprs(2).eval().asInstanceOf[Number].intValue()))
@@ -1385,6 +1387,16 @@ object GraftFunctions {
 
   /** Native numeric-array sum (double); requires `register(spark)` first. */
   def arraySum(arr: Column): Column = call_function("array_sum", arr)
+
+  /** Native sum of squares of a numeric array (double); requires
+    * `register(spark)` first.
+    */
+  def arraySumSquares(arr: Column): Column = call_function("array_sum_squares", arr)
+
+  /** Native interpolated median of a numeric array (double); requires
+    * `register(spark)` first.
+    */
+  def arrayMedian(arr: Column): Column = call_function("array_median", arr)
 
   /** Native L2 normalization (array<double>, null on zero/null vectors);
     * requires `register(spark)` first.

@@ -154,6 +154,8 @@ object Planner {
   private def reductionColumn(f: Funktion, key: String): Column = {
     val segments = key.split("\\.", 2).toList
     val arraySum = graft.functions.GraftFunctions.arraySum _
+    // interpolated median (quantile_cont(0.5) semantics, DuckDB-mirrorable)
+    val medianOfArray = graft.functions.GraftFunctions.arrayMedian _
     // dotted: project the element field out of the array-of-structs —
     // GetArrayStructFields, a plain codegen'd expression, not a HOF
     def dotted(source: String, target: String): Column =
@@ -185,33 +187,18 @@ object Planner {
     }
   }
 
-  /** Per-row interpolated median of a numeric array (`quantile_cont(0.5)`
-    * semantics — DuckDB-mirrorable for oracle parity): sort, take the
-    * middle element or the mean of the middle two. Null for empty arrays.
-    */
-  private def medianOfArray(arr: Column): Column = {
-    val sorted = array_sort(arr)
-    val n = size(arr)
-    // Column `/` is double division; the element indices must be int
-    val mid = ((n + lit(1)) / 2).cast("int")
-    val lo = (n / 2).cast("int")
-    when(n === 0, lit(null).cast(DoubleType))
-      .when(pmod(n, lit(2)) === 1, element_at(sorted, mid).cast(DoubleType))
-      .otherwise((element_at(sorted, lo).cast(DoubleType) +
-        element_at(sorted, lo + 1).cast(DoubleType)) / 2.0)
-  }
-
   /** Per-row sample standard deviation of a numeric array via the
     * two-sums identity sqrt((Σx² − (Σx)²/n)/(n−1)) — both sums fold
-    * left-to-right in the native array_sum, so a DuckDB mirror using the
-    * same identity over `list_sum` is bit-comparable. Null when n < 2;
-    * the inner term clamps at 0 against negative float residue.
+    * left-to-right in native code (array_sum, array_sum_squares), so a
+    * DuckDB mirror using the same identity over `list_sum` is
+    * bit-comparable. Null when n < 2; the inner term clamps at 0 against
+    * negative float residue. `greatest` skips nulls in both engines, so a
+    * null element (null sums) clamps to 0.0 on both sides.
     */
   private def stddevOfArray(arr: Column): Column = {
-    val arraySum = graft.functions.GraftFunctions.arraySum _
     val n = size(arr).cast(DoubleType)
-    val s = arraySum(arr)
-    val s2 = arraySum(transform(arr, x => x.cast(DoubleType) * x.cast(DoubleType)))
+    val s = graft.functions.GraftFunctions.arraySum(arr)
+    val s2 = graft.functions.GraftFunctions.arraySumSquares(arr)
     when(size(arr) < 2, lit(null).cast(DoubleType))
       .otherwise(sqrt(greatest((s2 - s * s / n) / (n - lit(1.0)), lit(0.0))))
   }

@@ -31,49 +31,25 @@ class DriverSuiteSpec extends AnyFunSuite {
   private def run(q: String, df: DataFrame = flat): DataFrame =
     Compiler.queryOrThrow(df, q)
 
-  test("driver contract: every oracle key has a queries entry") {
-    // an orphan oracle key makes the driver's compare report NO SPARK
-    // OUTPUT for that row — a silent correctness-score hole, caught here
-    // instead of in the round artifact
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle keys without queries: $orphans")
+  test("driver contract: the rows-only queries are the documented 9") {
     // rows-only queries (no oracle) are legitimate, but must be the
     // documented approximate set, not an accidental omission — pin the
     // count so a new query silently missing its oracle trips review
-    val rowsOnly = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    // 33 → 31 in round 10: q_emb_pca_whiten (covariance-identity) and
-    // q_dsir_mixture (recursive-CTE EG replay) gained full oracles;
-    // 31 → 28 in round 11: q_dedup_d4 (cell-quota mirror), q_lm_bucket_approx
-    // (≤1%-moved invariant), q_stats_approx_distinct (exact-side oracle);
-    // 28 → 24 later in round 11: q_sim_bq_topk / q_sim_sq_topk and their
-    // _recall meters are deterministic quantize → (score, id)-cut →
-    // exact-rerank pipelines (probes are the md5-salted hash sample, also
-    // replayable), so DuckDB replays them end to end ("approximate" = vs
-    // the exact top-k, never nondeterminism — and now even the METER
-    // measuring that gap is hash-verified)
-    // 24 → 22: q_sim_lsh_topk / q_sim_lsh_recall — the SRP sign family is
-    // splitmix64 of (table, plane, dim), replayed in DuckDB HUGEINT
-    // u-space bit-for-bit, so even the LSH search pipeline is
-    // deterministic end to end
-    // 22 → 20: q_dedup_embedding / q_dedup_embedding_recall — same SRP
-    // replay with the corpus-aware (planes, tables) cfg mirrored in SQL
-    // (verified through the dynamic branch at the generated sf1)
-    // 20 → 16: the four banded hard-miner rows — SRP replay + the exact
-    // miners' rounded-cosine band and (cosine, id) rank, with
-    // hardBandConfig's solver arithmetic as cfg CTEs (validated where the
-    // dial binds, at the generated sf10's (6, 36))
-    // 16 → 9 in round 12: the COMMITTED-index lifecycle (fixtures/ann —
-    // the q_bpe_apply_fixed pattern applied to ANN): search under a
-    // committed checkpoint is deterministic end to end, so DuckDB reads
-    // the same saved centroid/codebook parquet and replays
-    // q_sim_ivf_search / q_sim_pq_topk / q_sim_ivfpq_topk (+ their three
-    // recall meters) and q_dedup_semantic_steady (8-cell committed
-    // quantizer at the correctness SFs). The remaining 9 are genuinely
-    // non-mirrorable state: k-means/BPE TRAINING itself (q_sim_ivf_topk
-    // keeps the train+search lifecycle driver-visible), DEFLATE, HLL
-    // internals, eigensolves — each carries an invariant contract.
+    val rowsOnly = catalog.Catalog.specs.collect {
+      case catalog.QuerySpec(name, _, catalog.RowsOnly(_)) => name
+    }.toSet
+    // each RowsOnly spec names what cannot be mirrored (k-means and BPE
+    // training, DEFLATE, HLL internals, eigensolves) and the invariant
+    // contract that checks it instead
     assert(rowsOnly.size == 9, s"rows-only query count changed (${rowsOnly.size}): " +
       s"either add the missing oracle or update this pin.\n$rowsOnly")
+  }
+
+  test("driver contract: the catalog refuses a repeated query name") {
+    val spec = catalog.QuerySpec("q_twice", (s, _) => s.emptyDataFrame, catalog.RowsOnly("test"))
+    val e = intercept[IllegalArgumentException](catalog.QuerySpec.unique(Seq(spec, spec)))
+    assert(e.getMessage.contains("repeated query name: q_twice"))
+    assert(catalog.QuerySpec.unique(catalog.Catalog.specs).size == 207)
   }
 
   test("SELECT SUM(lvl) GROUP BY age (ref :638)") {

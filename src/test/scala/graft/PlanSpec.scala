@@ -55,6 +55,19 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>"), p)
   }
 
+  test("per-row MEDIAN / STDDEV plan native array code: no array_sort, no transform") {
+    // both are CodegenFallback higher-order functions (one interpreted
+    // lambda call per comparison or element)
+    val df = SparkEntry.queries("q_p5_stats")(spark, sfDir)
+    val hofs = df.queryExecution.executedPlan.collect { case node =>
+      node.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.ArraySort => e.prettyName
+        case e: org.apache.spark.sql.catalyst.expressions.ArrayTransform => e.prettyName
+      })
+    }.flatten
+    assert(hofs.isEmpty, df.queryExecution.executedPlan.toString)
+  }
+
   test("hash sampling is a shuffle-free narrow filter") {
     val p = plan(Sample.sampleByHash(docs, "doc_id", 10, "s").select($"doc_id"))
     assert(!p.contains("Exchange"), p)

@@ -326,4 +326,67 @@ class VectorExprSpec extends AnyFunSuite {
     assert(e.getMessage.contains("DATATYPE_MISMATCH") ||
       e.getMessage.contains("sorted_bin_contains requires"))
   }
+
+  test("array MEDIAN and sum of squares equal the array_sort / transform forms, nulls included") {
+    GraftFunctions.register(spark)
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.types.DoubleType
+    // the Column forms the planner used before the native expressions
+    def sortedMedian(arr: Column): Column = {
+      val sorted = array_sort(arr)
+      val n = size(arr)
+      val mid = ((n + lit(1)) / 2).cast("int")
+      val lo = (n / 2).cast("int")
+      when(n === 0, lit(null).cast(DoubleType))
+        .when(pmod(n, lit(2)) === 1, element_at(sorted, mid).cast(DoubleType))
+        .otherwise((element_at(sorted, lo).cast(DoubleType) +
+          element_at(sorted, lo + 1).cast(DoubleType)) / 2.0)
+    }
+    def foldedSquares(arr: Column): Column =
+      GraftFunctions.arraySum(transform(arr, x => x.cast(DoubleType) * x.cast(DoubleType)))
+    val nan = Double.NaN
+    def a(xs: java.lang.Double*): Option[Seq[java.lang.Double]] = Some(xs)
+    val rows = Seq(
+      a(3.0, null, 1.0), a(null, 2.0), a(1.0, null, null), a(), None,
+      a(0.0, -0.0, 5.0, -0.0), a(0.0, -0.0, 1.0), a(-0.0, 0.0, 1.0), a(nan, 1.0, 2.0),
+      a(2.5, 1.5, 4.0, 3.0), a(0.1, 0.7, 0.2))
+    // through an exchange, so the projection is not folded into the local relation
+    val df = rows.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
+      .withColumn("f", $"v".cast("array<float>"))
+      .withColumn("i", $"v".try_cast("array<int>"))
+      .repartition(1)
+    val cols = Seq("v", "f", "i")
+    def run(): Seq[org.apache.spark.sql.Row] = df.select($"id" +: cols.flatMap(c => Seq(
+        GraftFunctions.arrayMedian(col(c)), sortedMedian(col(c)),
+        GraftFunctions.arraySumSquares(col(c)), foldedSquares(col(c)))): _*)
+      .orderBy("id").collect().toSeq
+    def check(got: Seq[org.apache.spark.sql.Row]): Unit = got.foreach { r =>
+      for (k <- cols.indices; pair <- Seq(1, 3)) {
+        val (a, b) = (r.get(1 + 4 * k + pair - 1), r.get(1 + 4 * k + pair))
+        // Double.equals: NaN equals NaN, -0.0 differs from 0.0
+        assert(java.util.Objects.equals(a, b), s"row ${r.getInt(0)} ${cols(k)}: native $a vs column form $b")
+      }
+    }
+    val codegen = run()
+    check(codegen)
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    try check(run()) finally {
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+    }
+    val median = codegen.map(r => Option(r.get(1)))
+    // nulls sort last and count in n
+    assert(median.take(3) == Seq(Some(3.0), None, None))
+    // -0.0 and 0.0 keep their input order, as array_sort's stable sort does
+    assert(median(5).map(_.asInstanceOf[Double].compareTo(-0.0)).contains(0))
+    assert(median(6).map(_.asInstanceOf[Double].compareTo(-0.0)).contains(0))
+    assert(median(7).map(_.asInstanceOf[Double].compareTo(0.0)).contains(0))
+    assert(median(8) == Some(2.0) && median(9) == Some(2.75))
+    // STDDEV through the dialect: greatest skips nulls (as DuckDB's does),
+    // so a null element clamps to 0.0 rather than null
+    val sd = Compiler.queryOrThrow(df.select($"id", $"v"), "SELECT id, STDDEV(v) AS sd",
+      extensions = true).orderBy("id").collect().map(r => Option(r.get(1)))
+    assert(sd(0) == Some(0.0) && sd(3).isEmpty && sd(9) == Some(math.sqrt(3.25 / 3)))
+  }
 }

@@ -12,8 +12,8 @@ byte-exact on this container (JDK 17 vs CPython zlib), which upgrades the
 row from rows-only to an independently recomputed full-value check.
 
 Usage: deflate_check.py <spark_out_dir> <sf_dir> [--json=OUT]
-  where <spark_out_dir>/q_text_compress/*.parquet is a Verify/VerifySome
-  dump. Exits non-zero on any mismatch.
+  where <spark_out_dir>/q_text_compress/*.parquet is a graft.Verify dump
+  (the full surface, or `q_text_compress` named in its optional tail). Exits non-zero on any mismatch.
 """
 import sys, json, glob, os, zlib
 from decimal import Decimal, ROUND_HALF_UP
